@@ -303,9 +303,9 @@ def _reset_patch_fold(
         # net image: the image is definitive on its own (absent = NULL),
         # independent of prior table state. Patch-only histories are NOT
         # anchored — their image only overrides the columns it carries.
-        # LakeTable._merge_delta appends anchored rows without reading
-        # table state (the Hudi-MOR insert path); only unanchored rows
-        # need the resolve join.
+        # LakeTable.merge's delta buckets append anchored rows without
+        # reading table state (the Hudi-MOR insert path); only unanchored
+        # rows need the resolve join.
         F.col("_reset_pos").isNotNull().alias("anchored"),
     )
 

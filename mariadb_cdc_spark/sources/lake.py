@@ -54,8 +54,11 @@ from mariadb_cdc_spark.sources import stats as file_stats
 from mariadb_cdc_spark.sources import zorder
 
 
-def _bucket_col(keys: list[str], n_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
+def _bucket_col(keys: list, n_buckets: int) -> F.Column:
+    """Bucket id of the key columns (names or Columns). Callers pass keys
+    of the table's key types (merge casts the fold's string keys first),
+    so a row's bucket is the same on the write and the read path."""
+    return F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
 
 
 class CommitConflict(Exception):
@@ -133,13 +136,7 @@ def _rebase(ours: dict, base: dict, latest: dict, affected: list[int]) -> dict:
     file_stats.gc_stats(out)
     for sid, bid in ours.get("committed", {}).items():
         out["committed"][sid] = max(out["committed"].get(sid, -1), bid)
-    for sid, pos in ours.get("lineage", {}).items():
-        cur = out["lineage"].get(sid)
-        if cur is None or (pos["file"], pos["pos"]) >= (
-            cur["file"],
-            cur["pos"],
-        ):
-            out["lineage"][sid] = pos
+    _advance_lineage(out, ours.get("lineage"))
     have = {n for n, _ in out["schema"]}
     for n, s in ours["schema"]:
         if n not in have:
@@ -153,6 +150,15 @@ def _rebase(ours: dict, base: dict, latest: dict, affected: list[int]) -> dict:
     if ours.get("hot_keys"):
         out["hot_keys"] = ours["hot_keys"]
     return out
+
+
+def _advance_lineage(meta: dict, lineage: dict | None) -> None:
+    """Max-merge per-server binlog positions into `meta["lineage"]`: a
+    commit never moves a server's checkpoint backwards."""
+    for sid, pos in (lineage or {}).items():
+        cur = meta["lineage"].get(str(sid))
+        if cur is None or (pos["file"], pos["pos"]) >= (cur["file"], cur["pos"]):
+            meta["lineage"][str(sid)] = pos
 
 
 # Hidden per-row CDC columns: the binlog position that produced the row, plus
@@ -227,12 +233,9 @@ class LakeTable:
         }
         if initial is not None:
             data_rel = "data/v0"
-            (
-                initial.withColumn("_bucket", _bucket_col(keys, n_buckets))
-                .repartition(n_buckets, "_bucket")
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(os.path.join(t.path, data_rel))
+            t._write_buckets(
+                initial.withColumn("_bucket", _bucket_col(keys, n_buckets)),
+                data_rel, n_buckets,
             )
             meta["buckets"] = {
                 str(b): data_rel for b in t._present_buckets(data_rel)
@@ -1120,6 +1123,36 @@ class LakeTable:
         The per-column coalesce implements binlog_row_image=minimal partial
         updates (reference README.md:200-235).
 
+        Invariant: bucket = xxhash64 of the key columns CAST TO THE TABLE'S
+        KEY TYPES — the hash read_keys and _rewrite use. `_bucket` is
+        computed once on the change set and every written dir is
+        partitioned on that column, never re-hashed (the fold's keys are
+        strings; a bigint key hashes elsewhere as a string).
+
+        Each affected bucket gets one plan:
+          fresh  when NO affected bucket holds data (initial load, brand-new
+                 key space): rows come straight from the fold, no join;
+          cow    every bucket of a batch upserting more than
+                 MOR_MAX_ROW_FRACTION of the table's rows, otherwise only
+                 the buckets whose delta debt crossed MAX_DELTA_FILES or
+                 COMPACT_BYTES_FRACTION: rewrite state + batch, folding the
+                 bucket's deltas back in (compaction);
+          delta  every other bucket: append a delta file holding only the
+                 batch's resolved rows (bytes ~ batch, not bucket size).
+        Fresh and cow rows go to one base dir, delta rows to one delta dir,
+        and both land under ONE CAS commit, so readers never see half a
+        batch. `mode` names the plan (fresh, delta, cow, hybrid for cow +
+        delta, none for an empty epoch); `plan` counts buckets per kind.
+
+        Delta rows: ANCHORED rows (the fold proved their image definitive —
+        an INSERT / complete UPDATE / DELETE reset it) append with no
+        table-state read; the read side resolves per-key latest by
+        position, so a stale delta row can never win (the Hudi-MOR insert
+        path). UNANCHORED rows (patch-only histories under binlog_row_image=
+        minimal) resolve against current state, reading only their own
+        delta buckets. Folds without the `anchored` flag resolve every row —
+        slower, never wrong.
+
         Exactly-once: if (stream_id, batch_id) was already committed the call
         is a no-op and returns the recorded metrics.
         """
@@ -1145,19 +1178,23 @@ class LakeTable:
                     F.lit(int(floor["pos"])).alias("last_pos"),
                 )
             )
-        u = folded.withColumn("_bucket", _bucket_col(keys, n_buckets)).persist()
+        types = dict(meta["schema"])
+        u = folded.withColumn(
+            "_bucket",
+            _bucket_col(
+                [F.col(k).cast(_parse_type(types[k])) for k in keys], n_buckets
+            ),
+        ).persist()
 
         # One pass over the (small, one-row-per-key) folded set collects both
         # the affected buckets and the observed image columns; the persist
-        # keeps the fold from recomputing for the join below.
+        # keeps the fold from recomputing for the writes below.
         # `anchored` (when the fold provides it) marks rows whose image is
-        # definitive without prior state; unanchored (patch-only) rows and
-        # their buckets are counted so the delta path can scope — or skip —
-        # its table-state read.
-        has_anchor = "anchored" in u.columns
+        # definitive without prior state; the buckets of unanchored
+        # (patch-only) rows scope the delta side's table-state read.
         unanchored_cond = (
             (~F.col("anchored")) & (F.col("final_op") != F.lit("DELETE"))
-            if has_anchor
+            if "anchored" in u.columns
             else F.lit(True)
         )
         stats = u.agg(
@@ -1166,7 +1203,6 @@ class LakeTable:
             F.array_distinct(
                 F.flatten(F.collect_set(F.map_keys(F.col("image"))))
             ).alias("cols"),
-            F.sum(F.when(unanchored_cond, 1).otherwise(0)).alias("n_unanch"),
             F.collect_set(F.when(unanchored_cond, F.col("_bucket"))).alias(
                 "unanch_bks"
             ),
@@ -1186,36 +1222,10 @@ class LakeTable:
         ).collect()[0]
         affected = sorted(stats["bks"])
         n_upserts = int(stats["n"])
-        n_unanchored = int(stats["n_unanch"] or 0) if has_anchor else None
-        unanchored_buckets = (
-            sorted(b for b in stats["unanch_bks"] if b is not None)
-            if has_anchor
-            else None
-        )
+        unanchored = {b for b in stats["unanch_bks"] if b is not None}
         meta["hot_keys"] = [[r[k] for k in keys] for r in stats["hot"]]
         deltas = meta.setdefault("deltas", {})
         dbytes = meta.setdefault("delta_bytes", {})
-
-        if n_upserts == 0:
-            # Empty epoch (idle stream / heartbeat-only batch): commit the
-            # exactly-once marker and lineage METADATA-ONLY — no empty data
-            # dir per idle trigger interval, which at a 1s trigger would
-            # otherwise mint 86k junk commits a day for retention to chase.
-            u.unpersist()
-            if batch_id is not None:
-                meta["committed"][stream_id] = batch_id
-            if lineage:
-                for sid, posinfo in lineage.items():
-                    cur = meta["lineage"].get(str(sid))
-                    if cur is None or (posinfo["file"], posinfo["pos"]) >= (
-                        cur["file"],
-                        cur["pos"],
-                    ):
-                        meta["lineage"][str(sid)] = posinfo
-            # affected=[] -> any concurrent winner rebases cleanly; an
-            # idle-stream heartbeat commit can never fail on contention.
-            version = self._commit_optimistic(meta, base_meta, [], [])
-            return {"skipped": False, "version": version, "buckets": 0}
 
         # schema evolution: image keys not yet in the schema become new
         # string columns (metadata-only; DDL-driven typed evolution goes
@@ -1225,71 +1235,115 @@ class LakeTable:
             meta["schema"].append([c, "string"])
         logical = meta["schema"]
 
-        if not any(
-            str(b) in meta["buckets"] or deltas.get(str(b)) for b in affected
-        ):
-            # Fast path: no affected bucket has any existing data (initial
-            # load, or a batch touching only brand-new key space). The
-            # full-outer join against an empty target is the identity on the
-            # update side — build rows straight from the fold, skipping the
-            # join's shuffle+sort of the whole change set entirely.
-            merged = self._rows_from_fold(u, logical, keys, cast_types)
-            return self._commit_merged(
-                merged, meta, affected, version, u,
-                stream_id=stream_id, batch_id=batch_id, lineage=lineage,
-                n_upserts=n_upserts, base_meta=base_meta,
-            )
-        # MOR vs COW: small batches append per-bucket delta files (bytes ~
-        # batch size); large batches, and buckets whose deltas crossed the
-        # compaction threshold, take the copy-on-write rewrite (which folds
-        # the deltas back in and clears them).
-        need_compact = any(
-            len(deltas.get(str(b), [])) >= self.MAX_DELTA_FILES
-            or dbytes.get(str(b), 0)
-            > self.COMPACT_BYTES_FRACTION * max(self._base_bytes(meta, b), 1)
-            for b in affected
-        )
         big = n_upserts > self.MOR_MAX_ROW_FRACTION * max(
             meta["metrics"].get("n_rows") or 0, 1
         )
-        if not (need_compact or big):
-            return self._merge_delta(
-                u, meta, affected, version, n_upserts,
-                stream_id=stream_id, batch_id=batch_id, lineage=lineage,
-                cast_types=cast_types, base_meta=base_meta,
-                n_unanchored=n_unanchored,
-                unanchored_buckets=unanchored_buckets,
-            )
-
-        if need_compact and not big:
-            # PARTIAL compaction: only the buckets whose delta debt crossed
-            # the threshold take the COW rewrite; every other affected
-            # bucket keeps the O(batch) delta append. Without this split,
-            # ONE hot bucket's debt flips the WHOLE batch to copy-on-write
-            # — at production skew (a few hot tables among thousands of
-            # buckets) that is the difference between rewriting a bucket
-            # and rewriting the table. Both writes land under one CAS
-            # commit, so readers never see a half-applied batch.
-            compact_due = [
-                b for b in affected
-                if len(deltas.get(str(b), [])) >= self.MAX_DELTA_FILES
+        if not any(
+            str(b) in meta["buckets"] or deltas.get(str(b)) for b in affected
+        ):
+            plan = dict.fromkeys(affected, "fresh")
+        else:
+            plan = {
+                b: "cow"
+                if big
+                or len(deltas.get(str(b), [])) >= self.MAX_DELTA_FILES
                 or dbytes.get(str(b), 0)
                 > self.COMPACT_BYTES_FRACTION * max(self._base_bytes(meta, b), 1)
-            ]
-            if compact_due and len(compact_due) < len(affected):
-                return self._merge_hybrid(
-                    u, meta, affected, compact_due, version, n_upserts,
-                    stream_id=stream_id, batch_id=batch_id, lineage=lineage,
-                    cast_types=cast_types, base_meta=base_meta,
-                    n_unanchored=n_unanchored,
-                    unanchored_buckets=unanchored_buckets,
-                )
+                else "delta"
+                for b in affected
+            }
+        fresh, delta, cow = (
+            [b for b in affected if plan[b] == k]
+            for k in ("fresh", "delta", "cow")
+        )
 
-        merged = self._cow_frame(u, meta, affected, cast_types)
-        return self._commit_merged(
-            merged, meta, affected, version, u,
-            stream_id=stream_id, batch_id=batch_id, lineage=lineage,
-            n_upserts=n_upserts, base_meta=base_meta,
+        def rows_in(buckets: list[int]) -> DataFrame:
+            if len(buckets) == len(affected):
+                return u
+            return u.where(F.col("_bucket").isin(buckets))
+
+        # (rel, buckets, rows, stats level). Fresh and cow never share a
+        # batch: fresh means no affected bucket has state to rewrite. An
+        # empty epoch (idle stream / heartbeat-only batch) writes no dir:
+        # marker and lineage commit METADATA-ONLY with affected=[], so any
+        # concurrent winner rebases cleanly and idle triggers leave no junk
+        # data dirs for retention to chase. Unique dir per attempt:
+        # concurrent writers (and conflict-retried attempts) must never
+        # collide on a data path before the CAS decides the winner; losers'
+        # dirs become orphans that expire_snapshots GCs.
+        dirs = []
+        if fresh or cow:
+            rows = (
+                self._rows_from_fold(u, logical, keys, cast_types) if fresh
+                else self._cow_frame(rows_in(cow), meta, cow, cast_types)
+            )
+            dirs.append((f"data/v{version}-{uuid.uuid4().hex[:8]}",
+                         fresh or cow, rows, "base"))
+        if delta:
+            resolve = [b for b in delta if b in unanchored]
+            rows = self._delta_frame(rows_in(delta), meta, resolve, cast_types)
+            dirs.append((f"data/d{version}-{uuid.uuid4().hex[:8]}",
+                         delta, rows, "delta"))
+        for rel, buckets, frame, _ in dirs:
+            self._write_buckets(frame, rel, len(buckets))
+        u.unpersist()
+
+        for rel, buckets, _, level in dirs:
+            written = self._present_buckets(rel)
+            if level == "base":
+                present = set(written)
+                for b in buckets:
+                    if b in present:
+                        meta["buckets"][str(b)] = rel
+                    else:
+                        meta["buckets"].pop(str(b), None)
+                    # the rewrite folded this bucket's deltas into the base
+                    deltas.pop(str(b), None)
+                    dbytes.pop(str(b), None)
+            else:
+                for b in written:
+                    deltas.setdefault(str(b), []).append(rel)
+                    dbytes[str(b)] = dbytes.get(str(b), 0) + _dir_bytes(
+                        os.path.join(self.path, rel, f"_bucket={b}")
+                    )
+            if written:
+                meta.setdefault("stats", {})[rel] = (
+                    file_stats.collect_rel_stats(self.spark, self.path, rel)
+                )
+                file_stats.attach_blooms(
+                    self.spark, self.path, rel, keys, meta["stats"][rel],
+                    level=level,
+                )
+        file_stats.gc_stats(meta)
+        if batch_id is not None:
+            meta["committed"][stream_id] = batch_id
+        _advance_lineage(meta, lineage)
+        # Upper-bound row estimate feeding the MOR/COW decision only (an
+        # overestimate biases toward deltas, which compaction bounds).
+        meta["metrics"]["n_rows"] = (
+            meta["metrics"].get("n_rows", 0) + n_upserts
+        )
+        version = self._commit_optimistic(
+            meta, base_meta, affected, [rel for rel, *_ in dirs]
+        )
+        kinds = [k for k in ("fresh", "delta", "cow") if k in plan.values()]
+        return {
+            "skipped": False,
+            "version": version,
+            "buckets": len(affected),
+            "mode": "hybrid" if len(kinds) > 1 else (kinds or ["none"])[0],
+            "plan": {"fresh": len(fresh), "delta": len(delta), "cow": len(cow)},
+            "compacted_buckets": len(cow),
+        }
+
+    def _write_buckets(self, df: DataFrame, rel: str, n_parts: int) -> None:
+        """Write `df` to relation `rel`, partitioned on its `_bucket`
+        column (hash-repartitioned into `n_parts` tasks first)."""
+        (
+            df.repartition(max(n_parts, 1), "_bucket")
+            .write.mode("overwrite")
+            .partitionBy("_bucket")
+            .parquet(os.path.join(self.path, rel))
         )
 
     def _cow_frame(
@@ -1298,9 +1352,9 @@ class LakeTable:
     ) -> DataFrame:
         """The copy-on-write MERGE frame for `buckets`: full-outer join of
         current state (bases + deltas resolved) against the folded change
-        set, position-gated per key. Extracted from the monolithic COW
-        path so partial compaction (_merge_hybrid) can rewrite a SUBSET of
-        the affected buckets with the identical semantics."""
+        set, position-gated per key. Batch rows keep their `_bucket`;
+        state rows the batch does not touch take the bucket of their
+        stored keys, which are already of the table's key types."""
         keys = meta["keys"]
         logical = meta["schema"]
         target = self._read_state(meta, buckets)
@@ -1309,20 +1363,8 @@ class LakeTable:
         cond = [F.col(f"t.{k}") == F.col(f"u.{k}") for k in keys]
         joined = t.join(s, cond, "full_outer")
 
-        # Position gate: the update wins only if it is strictly newer than
-        # what the target row already reflects. Makes merge commutative
-        # across batches (out-of-order batch application and replayed
-        # suffixes both converge).
-        t_pos = F.struct(
-            F.col(f"t.{CDC_FILE}"), F.col(f"t.{CDC_POS}"), F.col(f"t.{CDC_IDX}")
-        )
-        u_pos = F.struct(
-            F.col("u.last_file").alias(CDC_FILE),
-            F.col("u.last_pos").alias(CDC_POS),
-            F.col("u.last_row_idx").alias(CDC_IDX),
-        )
         matched = F.col("u.final_op").isNotNull()
-        take_u = matched & (F.col(f"t.{CDC_FILE}").isNull() | (u_pos > t_pos))
+        take_u = matched & _batch_row_newer()
         deleting = take_u & (F.col("u.final_op") == F.lit("DELETE"))
 
         out_cols = []
@@ -1365,6 +1407,10 @@ class LakeTable:
                 F.when(take_u, F.col("u.final_op") == F.lit("DELETE"))
                 .otherwise(F.coalesce(F.col(f"t.{CDC_DELETED}"), F.lit(False)))
                 .alias(CDC_DELETED),
+                F.coalesce(
+                    F.col("u._bucket"),
+                    _bucket_col([f"t.{k}" for k in keys], meta["n_buckets"]),
+                ).alias("_bucket"),
             ]
         )
         return joined.select(*out_cols)
@@ -1393,86 +1439,7 @@ class LakeTable:
                     .otherwise(img_val.cast(typ) if cast_types else img_val)
                     .alias(n)
                 )
-        out_cols.extend(
-            [
-                F.col("u.last_file").alias(CDC_FILE),
-                F.col("u.last_pos").alias(CDC_POS),
-                F.col("u.last_row_idx").alias(CDC_IDX),
-                (F.col("u.final_op") == F.lit("DELETE")).alias(CDC_DELETED),
-            ]
-        )
-        return u.alias("u").select(*out_cols)
-
-    def _commit_merged(
-        self,
-        merged: DataFrame,
-        meta: dict,
-        affected: list[int],
-        version: int,
-        u: DataFrame,
-        *,
-        stream_id: str,
-        batch_id: int | None,
-        lineage: dict | None,
-        n_upserts: int = 0,
-        base_meta: dict | None = None,
-    ) -> dict:
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
-        # Unique dir per attempt: concurrent writers (and conflict-retried
-        # attempts) must never collide on a data path before the CAS decides
-        # the winner. Losers' dirs become orphans that expire_snapshots GCs.
-        data_rel = f"data/v{version}-{uuid.uuid4().hex[:8]}"
-        (
-            merged.withColumn("_bucket", _bucket_col(keys, n_buckets))
-            .repartition(max(len(affected), 1), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, data_rel))
-        )
-        u.unpersist()
-
-        written = set(self._present_buckets(data_rel))
-        for b in affected:
-            if b in written:
-                meta["buckets"][str(b)] = data_rel
-            else:
-                meta["buckets"].pop(str(b), None)
-            # COW rewrite folded any deltas of this bucket into the new base
-            meta.setdefault("deltas", {}).pop(str(b), None)
-            meta.setdefault("delta_bytes", {}).pop(str(b), None)
-        if written:
-            meta.setdefault("stats", {})[data_rel] = (
-                file_stats.collect_rel_stats(self.spark, self.path, data_rel)
-            )
-            file_stats.attach_blooms(
-                self.spark, self.path, data_rel, keys,
-                meta["stats"][data_rel], level="base",
-            )
-        file_stats.gc_stats(meta)
-        if batch_id is not None:
-            meta["committed"][stream_id] = batch_id
-        if lineage:
-            for sid, posinfo in lineage.items():
-                cur = meta["lineage"].get(str(sid))
-                if cur is None or (posinfo["file"], posinfo["pos"]) >= (
-                    cur["file"],
-                    cur["pos"],
-                ):
-                    meta["lineage"][str(sid)] = posinfo
-        # Upper-bound row estimate feeding the MOR/COW decision only (an
-        # overestimate biases toward deltas, which compaction bounds).
-        meta["metrics"]["n_rows"] = (
-            meta["metrics"].get("n_rows", 0) + n_upserts
-        )
-        if base_meta is None:
-            meta["version"] = version
-            meta["ts"] = time.time()
-            self._write_metadata(meta)
-        else:
-            version = self._commit_optimistic(
-                meta, base_meta, affected, [data_rel]
-            )
-        return {"skipped": False, "version": version, "buckets": len(affected)}
+        return u.alias("u").select(*out_cols, *_batch_row_gate())
 
     def _read_buckets(
         self, meta: dict, buckets: list[int], internal: bool = False
@@ -1794,39 +1761,30 @@ class LakeTable:
         self,
         u: DataFrame,
         meta: dict,
-        affected: list[int],
+        resolve: list[int],
         cast_types: bool,
-        n_unanchored: int | None,
-        unanchored_buckets: list[int] | None,
     ) -> DataFrame:
-        """The merge-on-read delta rows for `u` (see _merge_delta for the
-        anchored/unanchored split semantics). Extracted so _merge_hybrid
-        can delta-append a SUBSET of the affected buckets."""
+        """The merge-on-read delta rows for `u`: anchored rows straight from
+        the fold, the rest resolved against the current state of the
+        `resolve` buckets (their own buckets; see _merge_once)."""
         keys = meta["keys"]
         logical = meta["schema"]
-        has_anchor = "anchored" in u.columns and n_unanchored is not None
-
-        if has_anchor:
-            unanchored_cond = (~F.col("anchored")) & (
-                F.col("final_op") != F.lit("DELETE")
-            )
-            direct = u.where(~unanchored_cond)
-            patchy = u.where(unanchored_cond) if n_unanchored else None
-        else:
-            direct, patchy = None, u
+        has_anchor = "anchored" in u.columns
+        unanchored_cond = (~F.col("anchored")) & (
+            F.col("final_op") != F.lit("DELETE")
+        ) if has_anchor else F.lit(True)
 
         parts: list[DataFrame] = []
-        if direct is not None:
-            parts.append(self._rows_from_fold(direct, logical, keys, cast_types))
-        if patchy is not None:
-            scan_buckets = (
-                unanchored_buckets if has_anchor and unanchored_buckets
-                is not None else affected
-            )
-            cur = self._read_state(meta, scan_buckets)
+        if has_anchor:
+            parts.append(self._rows_from_fold(
+                u.where(~unanchored_cond), logical, keys, cast_types
+            ))
+        if resolve:
+            patchy = u.where(unanchored_cond) if has_anchor else u
+            cur = self._read_state(meta, resolve)
             if has_anchor:
-                # the patchy key set is small (n_unanchored rows) — shrink
-                # the state side before the resolve join
+                # the patchy key set is small (unanchored rows only) —
+                # shrink the state side before the resolve join
                 cur = cur.join(
                     F.broadcast(patchy.select(*keys)), keys, "left_semi"
                 )
@@ -1835,17 +1793,8 @@ class LakeTable:
             cond = [F.col(f"t.{k}") == F.col(f"u.{k}") for k in keys]
             joined = s.join(t, cond, "left_outer")
 
-            t_pos = F.struct(
-                F.col(f"t.{CDC_FILE}"), F.col(f"t.{CDC_POS}"),
-                F.col(f"t.{CDC_IDX}"),
-            )
-            u_pos = F.struct(
-                F.col("u.last_file").alias(CDC_FILE),
-                F.col("u.last_pos").alias(CDC_POS),
-                F.col("u.last_row_idx").alias(CDC_IDX),
-            )
             exists = F.col(f"t.{keys[0]}").isNotNull()
-            newer = F.col(f"t.{CDC_FILE}").isNull() | (u_pos > t_pos)
+            newer = _batch_row_newer()
             deleting = F.col("u.final_op") == F.lit("DELETE")
             take = (~exists & ~deleting) | (exists & newer)
 
@@ -1877,248 +1826,15 @@ class LakeTable:
                         .otherwise(F.coalesce(img_val, base))
                         .alias(n)
                     )
-            out_cols.extend(
-                [
-                    F.col("u.last_file").alias(CDC_FILE),
-                    F.col("u.last_pos").alias(CDC_POS),
-                    F.col("u.last_row_idx").alias(CDC_IDX),
-                    deleting.alias(CDC_DELETED),
-                ]
+            parts.append(
+                joined.where(take).select(*out_cols, *_batch_row_gate())
             )
-            parts.append(joined.where(take).select(*out_cols))
 
         delta = parts[0]
         for p in parts[1:]:
             delta = delta.unionByName(p)
 
         return delta
-
-    def _merge_hybrid(
-        self,
-        u: DataFrame,
-        meta: dict,
-        affected: list[int],
-        compact_due: list[int],
-        version: int,
-        n_upserts: int,
-        *,
-        stream_id: str,
-        batch_id: int | None,
-        lineage: dict | None,
-        cast_types: bool,
-        base_meta: dict | None = None,
-        n_unanchored: int | None = None,
-        unanchored_buckets: list[int] | None = None,
-    ) -> dict:
-        """Partial compaction: COW-rewrite only `compact_due` (the buckets
-        whose delta debt crossed the threshold), delta-append everything
-        else, ONE atomic commit. The scale rationale: need_compact used to
-        flip the WHOLE batch to copy-on-write, so one hot bucket's debt
-        forced a rewrite of every affected bucket's state — at production
-        skew that's rewriting the table to pay one bucket's bill. Write
-        cost here is O(compact_due state + batch), the asymptote a
-        per-bucket compaction policy is supposed to have. Readers are
-        atomic: both data dirs land before the single CAS pointer swing,
-        and a conflict loser removes both."""
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
-        cset = set(compact_due)
-        dset = [b for b in affected if b not in cset]
-        in_c = F.col("_bucket").isin([int(b) for b in cset])
-        u_cow = u.where(in_c)
-        u_delta = u.where(~in_c)
-
-        merged = self._cow_frame(u_cow, meta, compact_due, cast_types)
-        rel_cow = f"data/v{version}-{uuid.uuid4().hex[:8]}"
-        (
-            merged.withColumn("_bucket", _bucket_col(keys, n_buckets))
-            .repartition(max(len(compact_due), 1), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, rel_cow))
-        )
-
-        del_unanch = (
-            [b for b in unanchored_buckets if b not in cset]
-            if unanchored_buckets is not None
-            else None
-        )
-        delta = self._delta_frame(
-            u_delta, meta, dset, cast_types, n_unanchored, del_unanch
-        )
-        rel_delta = f"data/d{version}-{uuid.uuid4().hex[:8]}"
-        (
-            delta.withColumn("_bucket", _bucket_col(keys, n_buckets))
-            .repartition(max(len(dset), 1), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, rel_delta))
-        )
-        u.unpersist()
-
-        written_cow = set(self._present_buckets(rel_cow))
-        for b in compact_due:
-            if b in written_cow:
-                meta["buckets"][str(b)] = rel_cow
-            else:
-                meta["buckets"].pop(str(b), None)
-            # the rewrite folded this bucket's deltas into the new base
-            meta.setdefault("deltas", {}).pop(str(b), None)
-            meta.setdefault("delta_bytes", {}).pop(str(b), None)
-        if written_cow:
-            meta.setdefault("stats", {})[rel_cow] = (
-                file_stats.collect_rel_stats(self.spark, self.path, rel_cow)
-            )
-            file_stats.attach_blooms(
-                self.spark, self.path, rel_cow, keys,
-                meta["stats"][rel_cow], level="base",
-            )
-
-        written_deltas = self._present_buckets(rel_delta)
-        for b in written_deltas:
-            meta.setdefault("deltas", {}).setdefault(str(b), []).append(
-                rel_delta
-            )
-            meta.setdefault("delta_bytes", {})[str(b)] = meta[
-                "delta_bytes"
-            ].get(str(b), 0) + _dir_bytes(
-                os.path.join(self.path, rel_delta, f"_bucket={b}")
-            )
-        if written_deltas:
-            meta.setdefault("stats", {})[rel_delta] = (
-                file_stats.collect_rel_stats(self.spark, self.path, rel_delta)
-            )
-            file_stats.attach_blooms(
-                self.spark, self.path, rel_delta, keys,
-                meta["stats"][rel_delta],
-            )
-        file_stats.gc_stats(meta)
-
-        if batch_id is not None:
-            meta["committed"][stream_id] = batch_id
-        if lineage:
-            for sid, posinfo in lineage.items():
-                cur = meta["lineage"].get(str(sid))
-                if cur is None or (posinfo["file"], posinfo["pos"]) >= (
-                    cur["file"],
-                    cur["pos"],
-                ):
-                    meta["lineage"][str(sid)] = posinfo
-        meta["metrics"]["n_rows"] = (
-            meta["metrics"].get("n_rows", 0) + n_upserts
-        )
-        if base_meta is None:
-            meta["version"] = version
-            meta["ts"] = time.time()
-            self._write_metadata(meta)
-        else:
-            version = self._commit_optimistic(
-                meta, base_meta, affected, [rel_cow, rel_delta]
-            )
-        return {
-            "skipped": False,
-            "version": version,
-            "buckets": len(affected),
-            "mode": "hybrid",
-            "compacted_buckets": len(compact_due),
-        }
-
-    def _merge_delta(
-        self,
-        u: DataFrame,
-        meta: dict,
-        affected: list[int],
-        version: int,
-        n_upserts: int,
-        *,
-        stream_id: str,
-        batch_id: int | None,
-        lineage: dict | None,
-        cast_types: bool,
-        base_meta: dict | None = None,
-        n_unanchored: int | None = None,
-        unanchored_buckets: list[int] | None = None,
-    ) -> dict:
-        """MERGE as a per-bucket DELTA append (merge-on-read write path).
-
-        ANCHORED rows (the fold proved their image definitive: a reset —
-        INSERT / complete UPDATE / DELETE — anchors it) append directly,
-        with NO table-state read: the read side resolves per-key latest by
-        position anyway, so a stale or redundant delta row can never win.
-        This is the Hudi-MOR insert path, and it makes micro-batch ingest
-        cost O(batch), not O(touched-bucket state) per epoch — at a
-        full-row-image source (the MariaDB default) EVERY row is anchored
-        and the state read disappears entirely.
-
-        UNANCHORED rows (patch-only histories under binlog_row_image=
-        minimal) must resolve against current state so their delta row is a
-        complete image; that join reads ONLY the unanchored rows' buckets
-        and semi-joins the scan down to their keys. Folds that don't emit
-        the `anchored` flag (hand-built frames) resolve everything —
-        slower, never wrong.
-
-        Bytes written stay proportional to the batch, not the touched
-        buckets (tools/probe_write_amp.py measures it).
-        """
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
-        delta = self._delta_frame(
-            u, meta, affected, cast_types, n_unanchored, unanchored_buckets
-        )
-
-        data_rel = f"data/d{version}-{uuid.uuid4().hex[:8]}"
-        (
-            delta.withColumn("_bucket", _bucket_col(keys, n_buckets))
-            .repartition(max(len(affected), 1), "_bucket")
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(os.path.join(self.path, data_rel))
-        )
-        u.unpersist()
-
-        written_deltas = self._present_buckets(data_rel)
-        for b in written_deltas:
-            meta.setdefault("deltas", {}).setdefault(str(b), []).append(
-                data_rel
-            )
-            meta.setdefault("delta_bytes", {})[str(b)] = meta[
-                "delta_bytes"
-            ].get(str(b), 0) + _dir_bytes(
-                os.path.join(self.path, data_rel, f"_bucket={b}")
-            )
-        if written_deltas:
-            meta.setdefault("stats", {})[data_rel] = (
-                file_stats.collect_rel_stats(self.spark, self.path, data_rel)
-            )
-            file_stats.attach_blooms(
-                self.spark, self.path, data_rel, keys,
-                meta["stats"][data_rel],
-            )
-        if batch_id is not None:
-            meta["committed"][stream_id] = batch_id
-        if lineage:
-            for sid, posinfo in lineage.items():
-                cur_pos = meta["lineage"].get(str(sid))
-                if cur_pos is None or (posinfo["file"], posinfo["pos"]) >= (
-                    cur_pos["file"],
-                    cur_pos["pos"],
-                ):
-                    meta["lineage"][str(sid)] = posinfo
-        meta["metrics"]["n_rows"] = (
-            meta["metrics"].get("n_rows", 0) + n_upserts
-        )
-        if base_meta is None:
-            meta["version"] = version
-            meta["ts"] = time.time()
-            self._write_metadata(meta)
-        else:
-            version = self._commit_optimistic(
-                meta, base_meta, affected, [data_rel]
-            )
-        return {
-            "skipped": False,
-            "version": version,
-            "buckets": len(affected),
-            "mode": "delta",
-        }
 
     # ------------------------------------------------------------ maintenance
     def lineage(self) -> dict:
@@ -2129,6 +1845,31 @@ class LakeTable:
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)
+
+
+def _batch_row_gate() -> list[F.Column]:
+    """A batch row `u`'s position-gate columns, tombstone flag and bucket,
+    as a storage row carries them."""
+    return [
+        F.col("u.last_file").alias(CDC_FILE),
+        F.col("u.last_pos").alias(CDC_POS),
+        F.col("u.last_row_idx").alias(CDC_IDX),
+        (F.col("u.final_op") == F.lit("DELETE")).alias(CDC_DELETED),
+        F.col("u._bucket"),
+    ]
+
+
+def _batch_row_newer() -> F.Column:
+    """Position gate of a batch row `u` against a state row `t`: the
+    update wins only if it is strictly newer than what the state row
+    already reflects. Makes merge commutative across batches
+    (out-of-order batch application and replayed suffixes both
+    converge)."""
+    t_pos = F.struct(
+        F.col(f"t.{CDC_FILE}"), F.col(f"t.{CDC_POS}"), F.col(f"t.{CDC_IDX}")
+    )
+    u_pos = F.struct(*_batch_row_gate()[:3])
+    return F.col(f"t.{CDC_FILE}").isNull() | (u_pos > t_pos)
 
 
 def _latest_per_key(df: DataFrame, keys: list[str]) -> DataFrame:

@@ -15,7 +15,7 @@ Soundness under merge-on-read (the part plain Iceberg does not have to
 deal with): a dirty bucket's live row set is the per-key LATEST over its
 base + delta relations, and delta relations may legitimately carry STALE
 rows (anchored appends skip the state read by design — lake.py
-`_merge_delta`). File-level skipping inside such a bucket is therefore
+`_delta_frame`). File-level skipping inside such a bucket is therefore
 UNSOUND: dropping the relation that holds a key's newest (non-matching)
 row would resurrect its stale (matching) row from another relation. The
 safe granularities, used here:

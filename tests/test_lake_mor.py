@@ -4,6 +4,7 @@ deltas back into the base."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -417,3 +418,96 @@ def test_hybrid_merge_trips_on_byte_ratio_and_preserves_state(spark, tmp_path):
     )
     assert res2.get("skipped") is True
     assert {r["id"]: r["val"] for r in table.read().collect()}["k1"] == "slim"
+
+
+TYPED = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("score", T.LongType()),
+    ]
+)
+
+
+def _fold_rows(spark, rows):
+    """Fold-shaped frame: STRING key column plus `anchored`, exactly what
+    operators.fold.fold_changes hands to merge. rows: (id, image, pos,
+    anchored); every row is an UPSERT."""
+    return spark.createDataFrame(
+        [
+            (str(rid), "UPSERT", img, "bin.000001", pos, 0, 1, anchored)
+            for rid, img, pos, anchored in rows
+        ],
+        "id string, final_op string, image map<string,string>,"
+        " last_file string, last_pos long, last_row_idx int,"
+        " n_changes long, anchored boolean",
+    )
+
+
+def _insert(i):
+    return (i, {"id": str(i), "name": f"n{i}", "score": str(i)}, 100 + i, True)
+
+
+def _patch(i, pos, **cols):
+    return (i, {c: str(v) for c, v in cols.items()}, pos, False)
+
+
+@pytest.fixture(scope="module")
+def typed_base(spark, tmp_path_factory):
+    """200 inserted rows in a 4-bucket bigint-keyed table, built once and
+    copied per case."""
+    path = str(tmp_path_factory.mktemp("typed") / "t")
+    LakeTable.create(spark, path, TYPED, ["id"], n_buckets=4).merge(
+        _fold_rows(spark, [_insert(i) for i in range(200)])
+    )
+    return path
+
+
+@pytest.mark.parametrize("case", ["fresh", "delta", "hybrid", "cow"])
+def test_typed_key_merge_buckets_on_table_types(
+    spark, tmp_path, typed_base, case
+):
+    """A bigint-keyed table fed string fold keys: every plan kind must
+    bucket on the TYPED key (the hash read_keys and the writer use), so
+    the rows land in, and minimal-image patches resolve against, the
+    bucket that holds them. Key 1 hashes to different buckets as a string
+    and as a bigint, so bucketing the fold's string column would commit
+    rows under the wrong bucket pointer."""
+    import shutil
+
+    from mariadb_cdc_spark.sources.lake import _bucket_col
+
+    one = spark.createDataFrame([("1",)], "id string")
+    assert tuple(one.select(
+        _bucket_col(["id"], 4), _bucket_col([F.col("id").cast("bigint")], 4)
+    ).first()) == (0, 2)
+    path = str(tmp_path / "t")
+    if case == "fresh":
+        table = LakeTable.create(spark, path, TYPED, ["id"], n_buckets=4)
+        state = {}
+    else:
+        shutil.copytree(typed_base, path)
+        table = LakeTable(spark, path)
+        state = {i: (i, f"n{i}", i) for i in range(200)}
+    if case == "hybrid":
+        # byte debt over COMPACT_BYTES_FRACTION on key 1's bucket only
+        fat = "".join(f"{i * 2654435761 % 2**32:08x}" for i in range(4000))
+        res = table.merge(_fold_rows(spark, [_patch(1, 5_000, name=fat)]))
+        assert res["mode"] == "delta"
+    batch = {
+        "fresh": [_insert(1)],
+        "delta": [_patch(1, 10_000, score=77)],
+        "hybrid": [_patch(1, 10_000, name="slim")]
+        + [_patch(i, 10_000 + i, score=-i) for i in range(2, 9)],
+        # more than MOR_MAX_ROW_FRACTION of the 200 rows
+        "cow": [_patch(i, 10_000 + i, score=-i) for i in range(45)],
+    }[case]
+    res = table.merge(_fold_rows(spark, batch))
+    for rid, img, _, _ in batch:
+        name, score = state.get(rid, (rid, None, None))[1:]
+        state[rid] = (rid, img.get("name", name),
+                      int(img.get("score", score)))
+    assert res["mode"] == case, res
+    assert sorted(tuple(r) for r in table.read().collect()) == sorted(
+        state.values()
+    )
