@@ -1451,7 +1451,7 @@ def q_cdc_point_lookup(spark, sf):
     """Bucket-pruned point reads (LakeTable.read_keys): build the e2e final
     state, then look up a deterministic key set (doc_id % 97 == 0 — some of
     which the wave plan deleted) by resolving each key's bucket with the
-    writer's hash and scanning ONLY those buckets + a broadcast semi-join.
+    writer's hash and scanning ONLY those buckets + a semi-join.
     Oracle = the closed-form final state filtered to the same keys."""
     from mariadb_cdc_spark.gen import MERGE_KEYS, generate_events, repo_table
     from mariadb_cdc_spark.pipeline import CdcConfig, apply_batch

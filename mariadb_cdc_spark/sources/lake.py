@@ -46,7 +46,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -589,11 +589,7 @@ class LakeTable:
                 raise ValueError("pass version or tag, not both")
             version = self.resolve_tag(tag)
         meta = self.metadata(version)
-        buckets = sorted(
-            {int(b) for b in meta["buckets"]}
-            | {int(b) for b, rels in meta.get("deltas", {}).items() if rels}
-        )
-        df = self._read_state(meta, buckets)
+        df = self._read_state(meta, sorted(_live_buckets(meta)))
         return df.where(~F.coalesce(F.col(CDC_DELETED), F.lit(False))).select(
             *[n for n, _ in meta["schema"]]
         )
@@ -605,24 +601,26 @@ class LakeTable:
     ) -> DataFrame:
         """Bucket-pruned point reads: resolve each requested key's bucket
         with the same hash the writer used, scan ONLY those buckets, then
-        semi-join down to the exact keys.
+        keep only the exact keys.
 
         The Iceberg bucket-partition-pruning equivalent for this format: at
         100 TB / 4096 buckets a single-key lookup reads 1/4096th of the
         table (one bucket's base + deltas) instead of a full scan.
 
-        `key_rows` is one dict (single key), a list of dicts (small
-        driver-side want-list, broadcast-semi-joined), or a DATAFRAME with
-        the merge-key columns — the scale path (round-3 verdict task 4): a
-        want-list of any size stays distributed end-to-end; the only
-        driver materialization is the DISTINCT BUCKET-ID set (bounded
-        O(n_buckets) rows, never O(keys)), and the semi-join is left to
-        AQE to broadcast when the want-list turns out small.
+        `key_rows` is one dict (single key) or a list of dicts (a small
+        driver-side want-list: planned on the driver with no Spark job —
+        see _point_lookup — and filtered exactly on its key literals), or a
+        DATAFRAME with the merge-key columns — the scale path (round-3
+        verdict task 4): a want-list of any size stays distributed
+        end-to-end; the only driver materialization is the DISTINCT
+        BUCKET-ID set (bounded O(n_buckets) rows, never O(keys)), and the
+        semi-join is left to AQE to broadcast when the want-list turns out
+        small.
         """
         meta = self.metadata(version)
         keys, n_buckets = meta["keys"], meta["n_buckets"]
-        types = dict(meta["schema"])
         if isinstance(key_rows, DataFrame):
+            types = dict(meta["schema"])
             missing = sorted(set(keys) - set(key_rows.columns))
             if missing:
                 raise ValueError(
@@ -634,79 +632,95 @@ class LakeTable:
                     for k in keys
                 ]
             ).dropDuplicates(keys)
-            broadcast_want = False
-        else:
-            rows = (
-                [key_rows] if isinstance(key_rows, dict) else list(key_rows)
-            )
-            if not rows:
-                raise ValueError("read_keys needs at least one key")
-            missing = sorted(
-                {k for k in keys for r in rows if k not in r}
-            )
-            if missing:
-                raise ValueError(
-                    f"lookup rows missing key columns: {missing}"
-                )
-            want = self.spark.createDataFrame(
-                [tuple(r[k] for k in keys) for r in rows],
-                T.StructType(
-                    [T.StructField(k, _parse_type(types[k])) for k in keys]
-                ),
-            ).dropDuplicates(keys)
-            broadcast_want = True
-        pairs: list[tuple[int, int]] | None = None
-        key_filters: list[tuple] = []
-        if broadcast_want:
-            # Driver-provided want-list: the key values are already in
-            # driver memory, so FILE-granular pruning costs nothing extra.
-            # One tiny job resolves bucket ids AND the bloom hash pairs
-            # (JVM xxhash64 — the same expression attach_blooms hashed the
-            # files with, so writer and reader agree by construction).
-            sel = want.select(
-                _bucket_col(keys, n_buckets).alias("b"),
-                *file_stats._hash_cols(keys),
-            ).collect()
-            hit = {int(r["b"]) for r in sel}
-            u64 = (1 << 64) - 1
-            pairs = [(r["h1"] & u64, r["h2"] & u64) for r in sel]
-            vals = {
-                k: sorted({r[k] for r in rows}, key=repr) for k in keys
-            }
-            if all(None not in v for v in vals.values()):
-                key_filters = file_stats.validate_filters(
-                    [(k, "in", v) for k, v in vals.items() if v]
-                )
-        else:
-            # DataFrame want-list (the scale path): bucket granularity
-            # only — file pruning would need the key set on the driver,
-            # exactly the O(keys) materialization this path exists to
-            # avoid.
+            # bucket granularity only — file pruning would need the key
+            # set on the driver, exactly the O(keys) materialization this
+            # path exists to avoid.
             hit = {
                 int(r["b"])
                 for r in want.select(
                     _bucket_col(keys, n_buckets).alias("b")
                 ).distinct().collect()
             }
-        present = {int(b) for b in meta["buckets"]} | {
-            int(b) for b, rels in meta.get("deltas", {}).items() if rels
-        }
-        live = sorted(hit & present)
-        if pairs is not None:
-            # exact-key file skipping: recorded min/max bounds + per-file
-            # key blooms; sound in dirty buckets (stats.prune_point)
-            plan = file_stats.prune_point(meta, live, key_filters, pairs)
-            df = self._read_state_plan(meta, plan)
+            df = self._read_state(meta, sorted(hit)).join(
+                want, on=keys, how="left_semi"
+            )
         else:
-            df = self._read_state(meta, live)
-        df = df.join(
-            F.broadcast(want) if broadcast_want else want,
-            on=keys,
-            how="left_semi",
-        )
+            _, plan, match = self._point_lookup(meta, key_rows)
+            df = self._read_state_plan(meta, plan).where(match)
         return df.where(~F.coalesce(F.col(CDC_DELETED), F.lit(False))).select(
             *[n for n, _ in meta["schema"]]
         )
+
+    def _point_lookup(
+        self, meta: dict, key_rows: dict | list[dict]
+    ) -> tuple[list[int], dict, Column]:
+        """Plan a driver-side want-list without a Spark job: (live buckets
+        hit, stats.prune_point file plan, exact-key predicate).
+
+        Each wanted key becomes literals cast to the table's key types;
+        the bucket id and the bloom hash pairs are the writer's own JVM
+        xxhash64 expressions (_bucket_col, stats._hash_cols) evaluated
+        over those literals from a one-row local relation, which Spark
+        constant-folds on the driver. Values are type-checked exactly as
+        createDataFrame verifies them. A key with a NULL part matches
+        nothing (as an equi-join), so it is dropped before planning; the
+        predicate is then an IN over key structs, which with non-NULL
+        literals equals the per-key AND of equalities — never the
+        per-column IN-lists' cross product."""
+        keys, n_buckets = meta["keys"], meta["n_buckets"]
+        types = dict(meta["schema"])
+        rows = [key_rows] if isinstance(key_rows, dict) else list(key_rows)
+        if not rows:
+            raise ValueError("read_keys needs at least one key")
+        missing = sorted({k for k in keys for r in rows if k not in r})
+        if missing:
+            raise ValueError(f"lookup rows missing key columns: {missing}")
+        key_types = [_parse_type(types[k]) for k in keys]
+        verify = T._make_type_verifier(
+            T.StructType([T.StructField(k, t) for k, t in zip(keys, key_types)])
+        )
+        wanted = [tuple(r[k] for k in keys) for r in rows]
+        for vals in wanted:
+            verify(vals)
+        wanted = list(dict.fromkeys(v for v in wanted if None not in v))
+        if not wanted:
+            return [], {}, F.lit(False)
+        lits = [
+            [F.lit(v).cast(t) for v, t in zip(vals, key_types)]
+            for vals in wanted
+        ]
+        sel = (
+            self.spark.sql("VALUES (0)")
+            .select(
+                F.array(
+                    *[
+                        F.struct(
+                            _bucket_col(ls, n_buckets).alias("b"),
+                            *file_stats._hash_cols(ls),
+                        )
+                        for ls in lits
+                    ]
+                )
+            )
+            .collect()[0][0]
+        )
+        hit = sorted({int(r["b"]) for r in sel} & _live_buckets(meta))
+        u64 = (1 << 64) - 1
+        pairs = [(r["h1"] & u64, r["h2"] & u64) for r in sel]
+        key_filters = file_stats.validate_filters(
+            [
+                (k, "in", sorted({vals[i] for vals in wanted}, key=repr))
+                for i, k in enumerate(keys)
+            ]
+        )
+        plan = file_stats.prune_point(meta, hit, key_filters, pairs)
+        match = F.struct(*[F.col(k) for k in keys]).isin(
+            *[
+                F.struct(*[c.alias(k) for c, k in zip(ls, keys)])
+                for ls in lits
+            ]
+        )
+        return hit, plan, match
 
     def _plan_where(self, filters: list[tuple], version: int | None):
         meta = self.metadata(version)
@@ -715,11 +729,8 @@ class LakeTable:
         bad = sorted({c for c, _, _ in filters} - schema_cols)
         if bad:
             raise ValueError(f"unknown filter columns: {bad}")
-        live = sorted(
-            {int(b) for b in meta["buckets"]}
-            | {int(b) for b, r in meta.get("deltas", {}).items() if r}
-        )
-        return meta, filters, live, file_stats.prune(meta, live, filters)
+        plan = file_stats.prune(meta, sorted(_live_buckets(meta)), filters)
+        return meta, filters, plan
 
     def read_where(
         self, filters: list[tuple], version: int | None = None
@@ -741,40 +752,11 @@ class LakeTable:
         delta appends mean a stale matching row must lose to its newer
         non-matching version, so per-file pruning inside such buckets
         would be unsound (stats.py module docstring)."""
-        meta, filters, _, plan = self._plan_where(filters, version)
-        logical = list(meta["schema"]) + _INTERNAL
-        deltas = meta.get("deltas", {})
-        clean_paths: list[str] = []
-        dirty_buckets: list[int] = []
-        for b, entry in plan.items():
-            if deltas.get(str(b)):
-                dirty_buckets.append(b)
-                continue
-            for rel, names in entry["rel_files"].items():
-                d = os.path.join(self.path, rel, f"_bucket={b}")
-                if names is None:
-                    clean_paths.append(d)
-                else:
-                    clean_paths.extend(os.path.join(d, f) for f in names)
-        parts: list[DataFrame] = []
-        if clean_paths:
-            parts.append(
-                file_stats.residual_filter(
-                    self._aligned_scan(clean_paths, logical), filters
-                )
-            )
-        if dirty_buckets:
-            parts.append(
-                file_stats.residual_filter(
-                    self._read_state(meta, sorted(dirty_buckets)), filters
-                )
-            )
-        if not parts:
-            parts = [self._read_buckets(meta, [], internal=True)]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.where(
+        meta, filters, plan = self._plan_where(filters, version)
+        df = file_stats.residual_filter(
+            self._read_state_plan(meta, plan), filters
+        )
+        return df.where(
             ~F.coalesce(F.col(CDC_DELETED), F.lit(False))
         ).select(*[n for n, _ in meta["schema"]])
 
@@ -784,41 +766,8 @@ class LakeTable:
         """What read_where would scan vs what is live — the explain/probe
         companion (files and bytes from the recorded stats; relations
         without stats count as fully scanned)."""
-        meta, filters, live, plan = self._plan_where(filters, version)
-        deltas = meta.get("deltas", {})
-        stats = meta.get("stats", {})
-
-        def rel_files(rel: str, sb: str) -> dict:
-            return stats.get(rel, {}).get(sb, {})
-
-        tot_f = tot_b = scan_f = scan_b = 0
-        for b in live:
-            sb = str(b)
-            rels = ([meta["buckets"][sb]] if meta["buckets"].get(sb) else [])
-            rels += deltas.get(sb, [])
-            for rel in rels:
-                fmap = rel_files(rel, sb)
-                tot_f += len(fmap)
-                tot_b += sum(e["size"] for e in fmap.values())
-                entry = plan.get(b)
-                if entry is None:
-                    continue
-                names = entry["rel_files"].get(rel)
-                if names is None:
-                    if rel in entry["rel_files"]:
-                        scan_f += len(fmap)
-                        scan_b += sum(e["size"] for e in fmap.values())
-                else:
-                    scan_f += len(names)
-                    scan_b += sum(fmap[f]["size"] for f in names)
-        return {
-            "buckets_live": len(live),
-            "buckets_scanned": len(plan),
-            "files_live": tot_f,
-            "files_scanned": scan_f,
-            "bytes_live": tot_b,
-            "bytes_scanned": scan_b,
-        }
+        meta, _, plan = self._plan_where(filters, version)
+        return _plan_sizes(meta, plan)
 
     def changes(
         self, from_version: int, to_version: int | None = None
@@ -870,10 +819,7 @@ class LakeTable:
         touched = sorted(b for b in every if _sig(m0, b) != _sig(m1, b))
 
         def _live(meta):
-            present = {int(b) for b in meta["buckets"]} | {
-                int(b) for b, r in meta.get("deltas", {}).items() if r
-            }
-            df = self._read_state(meta, sorted(set(touched) & present))
+            df = self._read_state(meta, touched)
             df = df.where(~F.coalesce(F.col(CDC_DELETED), F.lit(False)))
             return df.select(
                 *[
@@ -920,43 +866,25 @@ class LakeTable:
         return out.select("change_type", *cols)
 
     def _read_state(self, meta: dict, buckets: list[int]) -> DataFrame:
-        """base ∪ deltas for `buckets` with per-key LATEST-position
-        resolution — but ONLY delta-carrying buckets pay the resolution
-        shuffle; delta-free buckets stream through untouched."""
-        deltas = meta.get("deltas", {})
-        plain = [b for b in buckets if not deltas.get(str(b))]
-        dirty = [b for b in buckets if deltas.get(str(b))]
-        parts = []
-        if plain:
-            parts.append(self._read_buckets(meta, plain, internal=True))
-        if dirty:
-            stack = self._read_buckets(meta, dirty, internal=True)
-            logical = list(meta["schema"]) + _INTERNAL
-            for b in dirty:
-                for rel in deltas[str(b)]:
-                    stack = stack.unionByName(
-                        self._aligned_scan(
-                            [os.path.join(self.path, rel, f"_bucket={b}")],
-                            logical,
-                        )
-                    )
-            parts.append(_latest_per_key(stack, meta["keys"]))
-        if not parts:
-            return self._read_buckets(meta, [], internal=True)  # typed empty
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        """base ∪ deltas of whole `buckets`, per-key LATEST-position
+        resolved: the _read_state_plan of every relation they hold."""
+        plan = {}
+        for b in buckets:
+            rels = file_stats.bucket_rels(meta, b)
+            if rels:
+                plan[b] = {"rel_files": dict.fromkeys(rels)}
+        return self._read_state_plan(meta, plan)
 
     def _read_state_plan(self, meta: dict, plan: dict) -> DataFrame:
-        """_read_state over an explicit FILE-level scan plan
-        ({bucket: {"rel_files": {rel: [filename] | None}}}, the
-        stats.prune_point shape). Only valid for exact-key reads: inside a
-        dirty bucket the plan may legitimately drop files, which is sound
-        there only because the caller semi-joins to the wanted keys and
-        no file containing a wanted key is ever dropped (stats.py bloom
-        soundness note). Per-rel aligned scans (schema may differ across
-        relations), one latest-per-key resolution over all dirty rows."""
+        """State rows of an explicit FILE-level scan plan
+        ({bucket: {"rel_files": {rel: [filename] | None}}}, None = the
+        relation's whole bucket dir; the stats.prune / prune_point shape).
+        Clean buckets stream through; only delta-carrying buckets pay one
+        latest-per-key resolution shuffle over all their rows. Soundness
+        of a plan that drops files inside a dirty bucket is the caller's
+        (exact-key reads only: no file holding a wanted key is dropped —
+        stats.py bloom soundness note). One aligned scan per relation and
+        cleanliness class: relations differ in physical schema."""
         deltas = meta.get("deltas", {})
         logical = list(meta["schema"]) + _INTERNAL
         plain_by_rel: dict[str, list[str]] = {}
@@ -970,24 +898,24 @@ class LakeTable:
                     if names is None
                     else [os.path.join(d, f) for f in names]
                 )
-        parts: list[DataFrame] = []
-        for paths in plain_by_rel.values():
-            parts.append(self._aligned_scan(paths, logical))
-        dirty_parts = [
+        parts = [
+            self._aligned_scan(paths, logical)
+            for paths in plain_by_rel.values()
+        ]
+        dirty = [
             self._aligned_scan(paths, logical)
             for paths in dirty_by_rel.values()
         ]
-        if dirty_parts:
-            stack = dirty_parts[0]
-            for p in dirty_parts[1:]:
-                stack = stack.unionByName(p)
-            parts.append(_latest_per_key(stack, meta["keys"]))
+        if dirty:
+            parts.append(_latest_per_key(_union(dirty), meta["keys"]))
         if not parts:
-            return self._read_buckets(meta, [], internal=True)  # typed empty
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            return self.spark.createDataFrame(  # typed empty
+                [],
+                T.StructType(
+                    [T.StructField(n, _parse_type(s)) for n, s in logical]
+                ),
+            )
+        return _union(parts)
 
     def point_plan(
         self, key_rows: dict | list[dict], version: int | None = None
@@ -996,65 +924,8 @@ class LakeTable:
         the explain/probe companion of pruning_plan for exact-key reads
         (bucket hash pruning + min/max bounds + per-file key blooms)."""
         meta = self.metadata(version)
-        keys, n_buckets = meta["keys"], meta["n_buckets"]
-        types = dict(meta["schema"])
-        rows = [key_rows] if isinstance(key_rows, dict) else list(key_rows)
-        want = self.spark.createDataFrame(
-            [tuple(r[k] for k in keys) for r in rows],
-            T.StructType(
-                [T.StructField(k, _parse_type(types[k])) for k in keys]
-            ),
-        ).dropDuplicates(keys)
-        sel = want.select(
-            _bucket_col(keys, n_buckets).alias("b"),
-            *file_stats._hash_cols(keys),
-        ).collect()
-        u64 = (1 << 64) - 1
-        pairs = [(r["h1"] & u64, r["h2"] & u64) for r in sel]
-        vals = {k: sorted({r[k] for r in rows}, key=repr) for k in keys}
-        key_filters = (
-            file_stats.validate_filters(
-                [(k, "in", v) for k, v in vals.items() if v]
-            )
-            if all(None not in v for v in vals.values())
-            else []
-        )
-        present = {int(b) for b in meta["buckets"]} | {
-            int(b) for b, rels in meta.get("deltas", {}).items() if rels
-        }
-        hit = sorted({int(r["b"]) for r in sel} & present)
-        plan = file_stats.prune_point(meta, hit, key_filters, pairs)
-        stats = meta.get("stats", {})
-        deltas = meta.get("deltas", {})
-        tot_f = tot_b = scan_f = scan_b = 0
-        for b in sorted(present):
-            sb = str(b)
-            rels = ([meta["buckets"][sb]] if meta["buckets"].get(sb) else [])
-            rels += deltas.get(sb, [])
-            entry = plan.get(b)
-            for rel in rels:
-                fmap = stats.get(rel, {}).get(sb, {})
-                tot_f += len(fmap)
-                tot_b += sum(e["size"] for e in fmap.values())
-                if entry is None:
-                    continue
-                names = entry["rel_files"].get(rel)
-                if names is None:
-                    if rel in entry["rel_files"]:
-                        scan_f += len(fmap)
-                        scan_b += sum(e["size"] for e in fmap.values())
-                elif names:
-                    scan_f += len(names)
-                    scan_b += sum(fmap[f]["size"] for f in names)
-        return {
-            "buckets_live": len(present),
-            "buckets_hit": len(hit),
-            "buckets_scanned": len(plan),
-            "files_live": tot_f,
-            "files_scanned": scan_f,
-            "bytes_live": tot_b,
-            "bytes_scanned": scan_b,
-        }
+        hit, plan, _ = self._point_lookup(meta, key_rows)
+        return {**_plan_sizes(meta, plan), "buckets_hit": len(hit)}
 
     # ----------------------------------------------------------------- merge
     def merge(
@@ -1441,37 +1312,16 @@ class LakeTable:
                 )
         return u.alias("u").select(*out_cols, *_batch_row_gate())
 
-    def _read_buckets(
-        self, meta: dict, buckets: list[int], internal: bool = False
-    ) -> DataFrame:
-        logical = list(meta["schema"]) + (_INTERNAL if internal else [])
-        empty = self.spark.createDataFrame(
-            [],
-            T.StructType([T.StructField(n, _parse_type(s)) for n, s in logical]),
-        )
-        dirs: dict[str, list[int]] = {}
-        for b in buckets:
-            rel = meta["buckets"].get(str(b))
-            if rel:
-                dirs.setdefault(rel, []).append(b)
-        if not dirs:
-            return empty
-        parts = [
-            self._aligned_scan(
-                [os.path.join(self.path, rel, f"_bucket={b}") for b in bs],
-                logical,
-            )
-            for rel, bs in dirs.items()
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     def _aligned_scan(self, paths: list[str], logical: list) -> DataFrame:
-        """Scan parquet dirs aligned to the logical schema (missing columns
-        null-fill, present columns cast — lazy schema evolution)."""
-        df = self.spark.read.parquet(*paths)
+        """Scan bucket dirs or files of ONE relation, aligned to the
+        logical schema (missing columns null-fill, present columns cast —
+        lazy schema evolution). The physical schema is the relation's
+        footer schema (_footer_schema), so no inference job runs. One
+        relation per call is an invariant, not a convenience: every file
+        of a relation shares its writer's schema, while two relations may
+        not (add_column, then a rewrite of one bucket), and a scan reads
+        a column only if the one schema it is given names it."""
+        df = self.spark.read.schema(_footer_schema(paths[0])).parquet(*paths)
         return df.select(
             *[
                 (
@@ -1671,11 +1521,7 @@ class LakeTable:
         base_meta = self.metadata()
         meta = copy.deepcopy(base_meta)
         version = meta["version"] + 1
-        buckets = sorted(
-            {int(b) for b in meta["buckets"]}
-            | {int(b) for b, rels in meta.get("deltas", {}).items() if rels}
-        )
-        df = fn(self._read_state(meta, buckets))
+        df = fn(self._read_state(meta, sorted(_live_buckets(meta))))
         data_rel = f"data/v{version}-{uuid.uuid4().hex[:8]}"
         if new_n_buckets is not None:
             meta["n_buckets"] = int(new_n_buckets)
@@ -1830,11 +1676,7 @@ class LakeTable:
                 joined.where(take).select(*out_cols, *_batch_row_gate())
             )
 
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-
-        return delta
+        return _union(parts)
 
     # ------------------------------------------------------------ maintenance
     def lineage(self) -> dict:
@@ -1870,6 +1712,77 @@ def _batch_row_newer() -> F.Column:
     )
     u_pos = F.struct(*_batch_row_gate()[:3])
     return F.col(f"t.{CDC_FILE}").isNull() | (u_pos > t_pos)
+
+
+def _live_buckets(meta: dict) -> set[int]:
+    """Buckets holding a base relation or at least one delta."""
+    return {int(b) for b in meta["buckets"]} | {
+        int(b) for b, rels in meta.get("deltas", {}).items() if rels
+    }
+
+
+def _plan_sizes(meta: dict, plan: dict) -> dict:
+    """Live vs planned buckets, files and bytes of a scan plan, from the
+    recorded stats (relations without stats count as fully scanned)."""
+    stats = meta.get("stats", {})
+    live = _live_buckets(meta)
+    tot_f = tot_b = scan_f = scan_b = 0
+    for b in sorted(live):
+        sb = str(b)
+        kept = plan.get(b, {"rel_files": {}})["rel_files"]
+        for rel in file_stats.bucket_rels(meta, b):
+            fmap = stats.get(rel, {}).get(sb, {})
+            tot_f += len(fmap)
+            tot_b += sum(e["size"] for e in fmap.values())
+            if rel not in kept:
+                continue
+            names = list(fmap) if kept[rel] is None else kept[rel]
+            scan_f += len(names)
+            scan_b += sum(fmap[f]["size"] for f in names)
+    return {
+        "buckets_live": len(live),
+        "buckets_scanned": len(plan),
+        "files_live": tot_f,
+        "files_scanned": scan_f,
+        "bytes_live": tot_b,
+        "bytes_scanned": scan_b,
+    }
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def _footer_schema(path: str) -> T.StructType:
+    """The Spark schema a relation's writer stored in the footer of one of
+    its parquet files (`path` is a file, or a bucket dir whose first data
+    file is read), every field nullable as Spark's own inference — which
+    reads the same footer key — makes it. Driver-side footer read: no
+    Spark job. A footer without that key raises."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        names = sorted(
+            f
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        if not names:
+            raise FileNotFoundError(f"no parquet data file in {path}")
+        path = os.path.join(path, names[0])
+    kv = pq.read_metadata(path).metadata or {}
+    raw = kv.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if raw is None:
+        raise ValueError(f"{path}: parquet footer carries no Spark schema")
+    return T.StructType(
+        [
+            T.StructField(f.name, f.dataType, True, f.metadata)
+            for f in T.StructType.fromJson(json.loads(raw)).fields
+        ]
+    )
 
 
 def _latest_per_key(df: DataFrame, keys: list[str]) -> DataFrame:

@@ -357,6 +357,13 @@ def file_might_match(file_stats: dict, filters: list[tuple]) -> bool:
     return True
 
 
+def bucket_rels(meta: dict, b: int) -> list[str]:
+    """Relations holding bucket `b`: its base (if any), then its deltas."""
+    sb = str(b)
+    base = meta["buckets"].get(sb)
+    return ([base] if base else []) + meta.get("deltas", {}).get(sb, [])
+
+
 def prune(meta: dict, buckets: list[int], filters: list[tuple]) -> dict:
     """Scan plan: {bucket: {"rel_files": {rel: [filename,...] | None}}}
     for buckets that must be read; skipped buckets are absent. A dirty
@@ -369,10 +376,7 @@ def prune(meta: dict, buckets: list[int], filters: list[tuple]) -> dict:
     plan: dict[int, dict] = {}
     for b in buckets:
         sb = str(b)
-        rels = []
-        if meta["buckets"].get(sb):
-            rels.append(meta["buckets"][sb])
-        rels.extend(deltas.get(sb, []))
+        rels = bucket_rels(meta, b)
         if not rels:
             continue
         dirty = bool(deltas.get(sb))
@@ -447,7 +451,7 @@ def residual_filter(df: DataFrame, filters: list[tuple]) -> DataFrame:
 # any wanted key — which means file-granular skipping is sound even inside
 # DIRTY (delta-carrying) buckets: a wanted key's latest-position resolution
 # sees every row of that key regardless, and non-wanted keys are dropped by
-# read_keys' semi-join whatever their (now possibly partial) resolution
+# read_keys' exact-key filter whatever their (now possibly partial) resolution
 # produced.
 BLOOM_SEED2 = "cdc-bloom-h2"
 BLOOM_BITS_PER_KEY = 10
@@ -456,12 +460,12 @@ BLOOM_MAX_FILE_ROWS = 2_000_000  # bigger files skip blooms (metadata size)
 _U64 = (1 << 64) - 1
 
 
-def _hash_cols(keys: list[str]) -> list[F.Column]:
+def _hash_cols(keys: list) -> list[F.Column]:
+    """Bloom hash pair of the key columns (names or Columns)."""
+    cols = [F.col(k) if isinstance(k, str) else k for k in keys]
     return [
-        F.xxhash64(*[F.col(k) for k in keys]).alias("h1"),
-        F.xxhash64(F.lit(BLOOM_SEED2), *[F.col(k) for k in keys]).alias(
-            "h2"
-        ),
+        F.xxhash64(*cols).alias("h1"),
+        F.xxhash64(F.lit(BLOOM_SEED2), *cols).alias("h2"),
     ]
 
 
@@ -579,17 +583,12 @@ def prune_point(
     both conservative: recorded min/max bounds vs per-key-column IN-lists,
     then the key bloom vs the want-list's hash pairs."""
     stats = meta.get("stats", {})
-    deltas = meta.get("deltas", {})
     plan: dict[int, dict] = {}
     for b in buckets:
         sb = str(b)
-        rels = []
-        if meta["buckets"].get(sb):
-            rels.append(meta["buckets"][sb])
-        rels.extend(deltas.get(sb, []))
         keep: dict[str, list | None] = {}
         any_survivor = False
-        for rel in rels:
+        for rel in bucket_rels(meta, b):
             fmap = stats.get(rel, {}).get(sb)
             if fmap is None:
                 keep[rel] = None  # no stats recorded: keep whole dir

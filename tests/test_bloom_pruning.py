@@ -258,3 +258,135 @@ def test_read_keys_after_compaction_and_truncate(spark, tmp_path, n_buckets):
     assert got == {"k0": "d0_0"}
     t.truncate()
     assert t.read_keys([{"id": "k0"}]).count() == 0
+
+
+def _new_job_ids(spark, before=None):
+    ids = set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+    return ids if before is None else ids - before
+
+
+def test_one_key_on_clean_table_runs_one_spark_job(spark, tmp_path):
+    """Read planning runs on the driver: bucket id and bloom hashes fold
+    from literals, each relation's schema comes from its footer, and the
+    want-list is an exact filter — only the scan itself is a job."""
+    t = _init(spark, str(tmp_path / "t"), n=400)
+    assert not any(t.metadata().get("deltas", {}).values())
+    before = _new_job_ids(spark)
+    got = t.read_keys({"id": "k7"}).collect()
+    assert [tuple(r) for r in got] == [("k7", _val(7))]
+    assert len(_new_job_ids(spark, before)) == 1
+
+
+def test_footer_schema_equals_inferred_schema(spark, tmp_path):
+    """The footer schema every scan is given is the one Spark's inference
+    returns, relation by relation, across add, widen and rename."""
+    from mariadb_cdc_spark.sources import lake
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.StringType()),
+            T.StructField("val", T.StringType()),
+            T.StructField("n", T.IntegerType()),
+        ]
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), schema, ["id"], n_buckets=2
+    )
+
+    def merge(batch, extra):
+        rows = [
+            (f"k{i}", "UPSERT", dict(id=f"k{i}", val=f"v{i}", n=str(i),
+                                     **extra), 100 * batch + i)
+            for i in range(40)
+        ]
+        t.merge(_folded(spark, rows), stream_id="s", batch_id=batch)
+
+    merge(0, {})
+    t.add_column("stars", "long")
+    merge(1, {"stars": "3"})
+    t.widen_column("n", "bigint")
+    merge(2, {"stars": "4"})
+    t.rename_column("stars", "stargazers")
+    rels = set()
+    for v in range(t.metadata()["version"] + 1):
+        meta = t.metadata(v)
+        rels |= set(meta["buckets"].values())
+        rels |= {r for rs in meta.get("deltas", {}).values() for r in rs}
+    assert len(rels) >= 4  # before add, after add, after widen, renamed
+    for rel in rels:
+        for d in (tmp_path / "t" / rel).glob("_bucket=*"):
+            assert lake._footer_schema(str(d)) == (
+                spark.read.parquet(str(d)).schema
+            ), (rel, d.name)
+    assert {r["stargazers"] for r in t.read().collect()} == {4}
+
+
+def _pair_table(spark, path):
+    schema = T.StructType(
+        [
+            T.StructField("a", T.StringType()),
+            T.StructField("b", T.StringType()),
+            T.StructField("val", T.StringType()),
+        ]
+    )
+    t = LakeTable.create(spark, path, schema, ["a", "b"], n_buckets=2)
+    rows = [
+        (a, b, "UPSERT", {"a": a, "b": b, "val": f"{a}{b}"}, "bin.000001",
+         100 + i, 0, 1)
+        for i, (a, b) in enumerate(
+            [("a1", "b1"), ("a1", "b2"), ("a2", "b1"), ("a2", "b2"),
+             ("a1", None)]
+        )
+    ]
+    t.merge(
+        spark.createDataFrame(
+            rows,
+            "a string, b string, final_op string, image map<string,string>,"
+            " last_file string, last_pos long, last_row_idx int,"
+            " n_changes long",
+        ),
+        stream_id="s",
+        batch_id=0,
+    )
+    return t
+
+
+def test_composite_want_list_matches_exact_pairs(spark, tmp_path):
+    """Per-column IN-lists would also return (a1, b1) and (a2, b2)."""
+    t = _pair_table(spark, str(tmp_path / "t"))
+    got = sorted(
+        (r["a"], r["b"])
+        for r in t.read_keys(
+            [{"a": "a1", "b": "b2"}, {"a": "a2", "b": "b1"}]
+        ).collect()
+    )
+    assert got == [("a1", "b2"), ("a2", "b1")]
+
+
+def test_null_key_value_matches_nothing(spark, tmp_path):
+    """An equi-join never matches NULL, not even the stored (a1, NULL)
+    row; struct equality would."""
+    t = _pair_table(spark, str(tmp_path / "t"))
+    assert ("a1", None) in {(r["a"], r["b"]) for r in t.read().collect()}
+    assert t.read_keys({"a": "a1", "b": None}).count() == 0
+    got = [
+        (r["a"], r["b"])
+        for r in t.read_keys(
+            [{"a": "a1", "b": None}, {"a": "a2", "b": "b2"}]
+        ).collect()
+    ]
+    assert got == [("a2", "b2")]
+
+
+def test_wrong_key_type_raises(spark, tmp_path):
+    """Key values are verified against the key types as createDataFrame
+    verifies rows (string fields accept any value; a bigint does not)."""
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("val", T.StringType())]
+    )
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema, ["id"])
+    assert t.read_keys({"id": 7}).count() == 0
+    with pytest.raises(TypeError):
+        t.read_keys({"id": "7"})
+    with pytest.raises(TypeError):
+        t.point_plan([{"id": 1}, {"id": 7.5}])

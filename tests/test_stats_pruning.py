@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mariadb_cdc_spark.sources import lake as lake_mod
 from mariadb_cdc_spark.sources import stats as fs
 from mariadb_cdc_spark.sources.lake import LakeTable
 
@@ -179,6 +180,46 @@ def test_pruning_across_schema_evolution(spark, tmp_path):
     t.drop_column("stargazers")
     with pytest.raises(ValueError):
         t.read_where([("stargazers", ">=", 10)])
+
+
+def test_read_where_keeps_added_column_across_relations(spark, tmp_path):
+    """Clean buckets of DIFFERENT relations hold different physical
+    schemas after add_column + a COW of one bucket: bucket 0's base
+    predates `stars`, bucket 1's rewrite carries it. Each relation must
+    be scanned with its own schema, or the newer bucket's `stars` values
+    silently read back NULL."""
+    t = _init(spark, str(tmp_path / "t"), n=200, n_buckets=2)
+    t.add_column("stars", "long")
+    ids = spark.createDataFrame(
+        [(f"k{i:05d}",) for i in range(200)], "id string"
+    )
+    b1 = [
+        r["id"]
+        for r in ids.where(
+            lake_mod._bucket_col([F.col("id")], 2) == 1
+        ).collect()
+    ]
+    res = t.merge(
+        _folded(
+            spark,
+            [
+                (k, "UPSERT", dict(_img(int(k[1:])), stars="7"), 9000 + j)
+                for j, k in enumerate(b1)
+            ],
+        ),
+        stream_id="init",
+        batch_id=1,
+    )
+    assert res["plan"] == {"fresh": 0, "delta": 0, "cow": 1}, res
+    meta = t.metadata()
+    assert meta["buckets"]["0"] != meta["buckets"]["1"]
+    assert not any(meta.get("deltas", {}).values())
+    stars = {r["id"]: r["stars"] for r in t.read().collect()}
+    assert sum(v == 7 for v in stars.values()) == len(b1)
+    got = {
+        r["id"]: r["stars"] for r in t.read_where([("n", ">=", 0)]).collect()
+    }
+    assert got == stars
 
 
 def test_pruning_across_truncate_and_time_travel(spark, tmp_path):
