@@ -163,6 +163,9 @@ def _session(cpus: int):
         # parallelism a real cluster would have.
         "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
         "spark.sql.files.openCostInBytes": str(1024 * 1024),
+        # no stage progress bars: the output tail saved with a run's JSON
+        # line (BENCH_r*.json "tail") should hold data, not bars
+        "spark.ui.showConsoleProgress": "false",
     }
     scratch = _tmpfs_scratch()
     if scratch:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _WORD_SPLIT = r"\s+"
+_BATCH_SEP = "\x1f"  # joins a pair's symbols into its batch map key
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -80,9 +81,10 @@ def _merge_expr(a: str, b: str):
 def _merge_batch_expr(pairs: list[tuple[str, str]]):
     """Greedy left-to-right merge of a SYMBOL-DISJOINT pair batch in one
     Catalyst fold. Because no two pairs share a symbol (and no pair's
-    concatenation is another pair's symbol — see _select_batch), one pass
-    with a lookup map is exactly the composition of the per-pair folds."""
-    sep = "\x1f"
+    concatenation is another pair's symbol, and no symbol holds
+    _BATCH_SEP — see _select_batch), one pass with a lookup map is
+    exactly the composition of the per-pair folds."""
+    sep = _BATCH_SEP
     mapping = F.create_map(
         *[x for a, b in pairs for x in (F.lit(a + sep + b), F.lit(a + b))]
     )
@@ -109,13 +111,21 @@ def _select_batch(
 ) -> list[tuple[str, str]]:
     """Greedily pick up to k mutually-independent pairs from the ranked
     snapshot: no shared symbols, and no pair whose merged symbol collides
-    with another chosen pair's symbol (so one fold == sequential folds)."""
+    with another chosen pair's symbol (so one fold == sequential folds).
+    A pair whose symbols contain _BATCH_SEP never joins a batch: the
+    batch fold keys its map on a + _BATCH_SEP + b, so such a key can also
+    match a different adjacent pair. It ends the batch, and is merged
+    alone (the exact _merge_expr fold) when it ranks first."""
     chosen: list[tuple[str, str]] = []
     used: set[str] = set()
     for r in rows:
         if len(chosen) >= k or taken + len(chosen) >= limit:
             break
         a, b = r["a"], r["b"]
+        if _BATCH_SEP in a or _BATCH_SEP in b:
+            if not chosen:
+                chosen.append((a, b))
+            break
         # `used` holds every chosen pair's symbols AND its concatenation,
         # so this one test covers both conflict directions (candidate
         # symbol == chosen concat, candidate concat == chosen symbol)

@@ -1316,12 +1316,13 @@ class LakeTable:
         """Scan bucket dirs or files of ONE relation, aligned to the
         logical schema (missing columns null-fill, present columns cast —
         lazy schema evolution). The physical schema is the relation's
-        footer schema (_footer_schema), so no inference job runs. One
-        relation per call is an invariant, not a convenience: every file
-        of a relation shares its writer's schema, while two relations may
-        not (add_column, then a rewrite of one bucket), and a scan reads
-        a column only if the one schema it is given names it."""
-        df = self.spark.read.schema(_footer_schema(paths[0])).parquet(*paths)
+        footer schema (stats._footer_schema), so no inference job runs.
+        One relation per call is an invariant, not a convenience: every
+        file of a relation shares its writer's schema, while two relations
+        may not (add_column, then a rewrite of one bucket), and a scan
+        reads a column only if the one schema it is given names it."""
+        schema = file_stats._footer_schema(paths[0])
+        df = self.spark.read.schema(schema).parquet(*paths)
         return df.select(
             *[
                 (
@@ -1754,35 +1755,6 @@ def _union(parts: list[DataFrame]) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def _footer_schema(path: str) -> T.StructType:
-    """The Spark schema a relation's writer stored in the footer of one of
-    its parquet files (`path` is a file, or a bucket dir whose first data
-    file is read), every field nullable as Spark's own inference — which
-    reads the same footer key — makes it. Driver-side footer read: no
-    Spark job. A footer without that key raises."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        names = sorted(
-            f
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        if not names:
-            raise FileNotFoundError(f"no parquet data file in {path}")
-        path = os.path.join(path, names[0])
-    kv = pq.read_metadata(path).metadata or {}
-    raw = kv.get(b"org.apache.spark.sql.parquet.row.metadata")
-    if raw is None:
-        raise ValueError(f"{path}: parquet footer carries no Spark schema")
-    return T.StructType(
-        [
-            T.StructField(f.name, f.dataType, True, f.metadata)
-            for f in T.StructType.fromJson(json.loads(raw)).fields
-        ]
-    )
 
 
 def _latest_per_key(df: DataFrame, keys: list[str]) -> DataFrame:

@@ -5,8 +5,9 @@ by evaluating the query predicate against those bounds before any data IO
 (`lower_bounds`/`upper_bounds` in the manifest entry). This module is that
 plane for the local lake format: every commit records, per written parquet
 file, JSON-safe [lower, upper] bounds (+ null counts) harvested from the
-parquet FOOTERS the writer just produced — no data re-scan, and the footer
-reads themselves run on executors, not the driver. `prune()` then turns a
+parquet FOOTERS the writer just produced — no data re-scan. A commit of at
+most DRIVER_FOOTER_MAX files reads its footers on a driver threadpool; a
+larger one reads them in one executor job. `prune()` then turns a
 small AND-of-comparisons predicate into a scan plan that skips whole
 buckets (and, inside clean single-relation buckets, individual files)
 whose bounds provably cannot satisfy the predicate.
@@ -46,11 +47,14 @@ from __future__ import annotations
 
 import base64
 import datetime
+import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TRUNCATE_LEN = 64
 _NA = "na"           # column present but no usable bounds -> never prunes
@@ -155,9 +159,57 @@ def _coerce_literal(v: Any, bound: Any) -> Any:
 
 # ------------------------------------------------------------- collection
 
+def _rel_files(table_path: str, data_rel: str) -> list[tuple[str, str, str]]:
+    """(bucket, filename, path) of every data file of a relation, sorted.
+    The list comes from the commit just made (driver-side listdir here; on
+    an object store the writer's task commit messages carry it)."""
+    base = os.path.join(table_path, data_rel)
+    out: list[tuple[str, str, str]] = []
+    if os.path.isdir(base):
+        for d in sorted(os.listdir(base)):
+            if not d.startswith("_bucket="):
+                continue
+            b = d.split("=", 1)[1]
+            bdir = os.path.join(base, d)
+            for f in sorted(os.listdir(bdir)):
+                if f.endswith(".parquet"):
+                    out.append((b, f, os.path.join(bdir, f)))
+    return out
+
+
+def _footer_schema(path: str) -> T.StructType:
+    """The Spark schema a relation's writer stored in the footer of one of
+    its parquet files (`path` is a file, or a bucket dir whose first data
+    file is read), every field nullable as Spark's own inference — which
+    reads the same footer key — makes it. Driver-side footer read: no
+    Spark job. A footer without that key raises."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        names = sorted(
+            f
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        if not names:
+            raise FileNotFoundError(f"no parquet data file in {path}")
+        path = os.path.join(path, names[0])
+    kv = pq.read_metadata(path).metadata or {}
+    raw = kv.get(b"org.apache.spark.sql.parquet.row.metadata")
+    if raw is None:
+        raise ValueError(f"{path}: parquet footer carries no Spark schema")
+    return T.StructType(
+        [
+            T.StructField(f.name, f.dataType, True, f.metadata)
+            for f in T.StructType.fromJson(json.loads(raw)).fields
+        ]
+    )
+
+
 def _footer_stats(path: str) -> dict[str, Any]:
-    """Per-column stats of ONE parquet file from its footer (runs on an
-    executor). Returns {col: [lo, hi, n_nulls] | "na" | "null"}.
+    """Per-column stats of ONE parquet file from its footer (on a driver
+    thread or an executor, see collect_rel_stats). Returns
+    {col: [lo, hi, n_nulls] | "na" | "null"}.
 
     Every ambiguity degrades toward "na" (keep the file); a chunk is
     counted all-null ONLY on explicit evidence (null_count == num_values),
@@ -224,28 +276,18 @@ def collect_rel_stats(spark, table_path: str, data_rel: str) -> dict:
     """Stats for every file of a just-written data relation:
     {str(bucket): {filename: {col: stat}}}.
 
-    The file list comes from the commit we just made (driver-side listdir
-    here; on an object store the writer's task commit messages carry it).
-    The FOOTER READS are distributed: one short executor job over the
-    files, returning O(files x columns) small rows — the same shape as
-    Iceberg building manifest entries, never a re-scan of the data.
+    Footers only, never a re-scan of the data: a driver threadpool reads
+    them for a commit of at most DRIVER_FOOTER_MAX files, and a larger
+    commit reads them in one short executor job returning O(files x
+    columns) small rows — the same shape as Iceberg building manifest
+    entries.
 
     CDC_LAKE_STATS=0 disables collection (tables then scan unpruned —
     prune() treats missing stats as keep-everything); the A/B knob for
     measuring the per-commit cost, not a recommended mode."""
     if os.environ.get("CDC_LAKE_STATS", "1") == "0":
         return {}
-    base = os.path.join(table_path, data_rel)
-    work: list[tuple[str, str, str]] = []
-    if os.path.isdir(base):
-        for d in sorted(os.listdir(base)):
-            if not d.startswith("_bucket="):
-                continue
-            b = d.split("=", 1)[1]
-            bdir = os.path.join(base, d)
-            for f in sorted(os.listdir(bdir)):
-                if f.endswith(".parquet"):
-                    work.append((b, f, os.path.join(bdir, f)))
+    work = _rel_files(table_path, data_rel)
     if not work:
         return {}
 
@@ -258,8 +300,6 @@ def collect_rel_stats(spark, table_path: str, data_rel: str) -> dict:
         # few KB of local/remote IO — a driver threadpool finishes in
         # milliseconds, where a Spark job would pay whole-job scheduling
         # latency per commit on the ingest hot path
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=min(16, len(work))) as ex:
             rows = list(ex.map(one, work))
     else:
@@ -438,7 +478,7 @@ def residual_filter(df: DataFrame, filters: list[tuple]) -> DataFrame:
 
 # Iceberg records per-data-file bloom filters (puffin blobs / parquet
 # bloom headers) so point lookups skip files inside a partition. This is
-# that plane: at commit time ONE distributed job hashes the merge keys of
+# that plane: at commit time ONE narrow Spark job hashes the merge keys of
 # every just-written file (JVM xxhash64 — the very expression read_keys
 # evaluates over its want-list at lookup time, so writer and reader agree
 # by construction, no Python re-implementation of the hash) and records a
@@ -469,6 +509,28 @@ def _hash_cols(keys: list) -> list[F.Column]:
     ]
 
 
+def _bloom(h1, h2) -> dict:
+    """One file's bloom over its rows' (h1, h2) uint64 hash pairs: m =
+    BLOOM_BITS_PER_KEY bits per row rounded up to whole bytes (at least
+    64), k probes at (h1 + i*h2) mod m."""
+    import numpy as np
+
+    m = max(64, ((BLOOM_BITS_PER_KEY * len(h1) + 7) // 8) * 8)
+    bits = np.zeros(m // 8, dtype=np.uint8)
+    for i in range(BLOOM_K):
+        pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
+        np.bitwise_or.at(
+            bits,
+            (pos >> np.uint64(3)).astype(np.int64),
+            np.left_shift(np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)),
+        )
+    return {
+        "m": m,
+        "k": BLOOM_K,
+        "b64": base64.b64encode(bits.tobytes()).decode("ascii"),
+    }
+
+
 def attach_blooms(
     spark,
     table_path: str,
@@ -478,8 +540,15 @@ def attach_blooms(
     level: str = "delta",
 ) -> None:
     """Attach per-file merge-key blooms to a freshly collected stats dict
-    (mutates `rel_stats[bucket][file]["bloom"]`). One short column-pruned
-    executor job over the commit's own files — O(written keys), same
+    (mutates `rel_stats[bucket][file]["bloom"]`).
+
+    One narrow Spark job and no Python worker: the driver reads each
+    file's footer row count and keeps the files of 1..BLOOM_MAX_FILE_ROWS
+    rows (bigger files get no bloom, to bound the metadata size); one
+    column-pruned scan of those files, given their footer schema so no
+    inference job runs, returns each row's input file and _hash_cols pair
+    as Arrow; the driver then groups the rows by file with numpy indices
+    and builds each file's bitset (_bloom). O(written keys), the same
     asymptote as writing them.
 
     Default policy (CDC_LAKE_BLOOMS=delta): only DELTA commits build
@@ -497,60 +566,41 @@ def attach_blooms(
         return
     if level == "base" and mode != "all":
         return
-    base = os.path.join(table_path, data_rel)
-    if not os.path.isdir(base):
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    files = [
+        p for b, f, p in _rel_files(table_path, data_rel)
+        if f in rel_stats.get(b, {})
+    ]
+    if not files:
         return
-    df = spark.read.parquet(base).select(
-        F.input_file_name().alias("_f"), *_hash_cols(keys)
+    with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
+        n_rows = list(ex.map(lambda p: pq.read_metadata(p).num_rows, files))
+    files = [
+        p for p, n in zip(files, n_rows) if 0 < n <= BLOOM_MAX_FILE_ROWS
+    ]
+    if not files:
+        return
+    tbl = (
+        spark.read.schema(_footer_schema(files[0]))
+        .parquet(*files)
+        .select(F.input_file_name().alias("_f"), *_hash_cols(keys))
+        .toArrow()
     )
-
-    def build(pdf):
-        import numpy as np
-        import pandas as pd
-
-        n = len(pdf)
-        if n == 0 or n > BLOOM_MAX_FILE_ROWS:
-            return pd.DataFrame({"f": [], "m": [], "b64": []})
-        m = max(64, ((BLOOM_BITS_PER_KEY * n + 7) // 8) * 8)
-        h1 = pdf["h1"].to_numpy().astype(np.uint64)
-        h2 = pdf["h2"].to_numpy().astype(np.uint64)
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        for i in range(BLOOM_K):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            np.bitwise_or.at(
-                bits,
-                (pos >> np.uint64(3)).astype(np.int64),
-                np.left_shift(
-                    np.uint8(1), (pos & np.uint64(7)).astype(np.uint8)
-                ),
-            )
-        return pd.DataFrame(
-            {
-                "f": [str(pdf["_f"].iloc[0])],
-                "m": [m],
-                "b64": [base64.b64encode(bits.tobytes()).decode("ascii")],
-            }
-        )
-
-    rows = (
-        df.groupBy("_f")
-        .applyInPandas(build, "f string, m long, b64 string")
-        .collect()
-    )
-    for r in rows:
-        parts = r["f"].split("/")
-        fname = parts[-1]
-        bparts = [p for p in parts if p.startswith("_bucket=")]
-        if not bparts:
-            continue
-        sb = bparts[-1].split("=", 1)[1]
-        entry = rel_stats.get(sb, {}).get(fname)
-        if entry is not None:
-            entry["bloom"] = {
-                "m": int(r["m"]),
-                "k": BLOOM_K,
-                "b64": r["b64"],
-            }
+    f_enc = tbl.column("_f").combine_chunks().dictionary_encode()
+    codes = f_enc.indices.to_numpy()
+    order = np.argsort(codes, kind="stable")
+    ends = np.cumsum(np.bincount(codes, minlength=len(f_enc.dictionary)))
+    # xxhash64 is a signed long; the probes use its uint64 bit pattern
+    h1 = tbl.column("h1").to_numpy().view(np.uint64)[order]
+    h2 = tbl.column("h2").to_numpy().view(np.uint64)[order]
+    start = 0
+    for uri, end in zip(f_enc.dictionary.to_pylist(), ends.tolist()):
+        bucket_dir, fname = uri.rsplit("/", 2)[-2:]
+        entry = rel_stats[bucket_dir.split("=", 1)[1]][fname]
+        entry["bloom"] = _bloom(h1[start:end], h2[start:end])
+        start = end
 
 
 def bloom_may_contain(bloom: dict, pairs: list[tuple[int, int]]) -> bool:

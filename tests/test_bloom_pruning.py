@@ -12,7 +12,10 @@ Properties pinned:
   - dirty-bucket soundness: a key whose newest version lives in a delta
     file resolves to that version even though OTHER files of the same
     bucket were bloom-pruned; a delta-deleted key stays deleted;
-  - point_plan shows files_scanned < files_live once deltas accumulate.
+  - point_plan shows files_scanned < files_live once deltas accumulate;
+  - the stored bloom bytes are pinned for string, bigint and composite
+    keys, so tables written earlier read the same; a commit's blooms
+    cost one Spark job; files over BLOOM_MAX_FILE_ROWS get none.
 """
 
 import pytest
@@ -280,8 +283,6 @@ def test_one_key_on_clean_table_runs_one_spark_job(spark, tmp_path):
 def test_footer_schema_equals_inferred_schema(spark, tmp_path):
     """The footer schema every scan is given is the one Spark's inference
     returns, relation by relation, across add, widen and rename."""
-    from mariadb_cdc_spark.sources import lake
-
     schema = T.StructType(
         [
             T.StructField("id", T.StringType()),
@@ -315,7 +316,7 @@ def test_footer_schema_equals_inferred_schema(spark, tmp_path):
     assert len(rels) >= 4  # before add, after add, after widen, renamed
     for rel in rels:
         for d in (tmp_path / "t" / rel).glob("_bucket=*"):
-            assert lake._footer_schema(str(d)) == (
+            assert fs._footer_schema(str(d)) == (
                 spark.read.parquet(str(d)).schema
             ), (rel, d.name)
     assert {r["stargazers"] for r in t.read().collect()} == {4}
@@ -390,3 +391,119 @@ def test_wrong_key_type_raises(spark, tmp_path):
         t.read_keys({"id": "7"})
     with pytest.raises(TypeError):
         t.point_plan([{"id": 1}, {"id": 7.5}])
+
+
+# Two single-file buckets per relation; the pinned blooms are the bytes
+# the applyInPandas builder stored before the one-job harvest replaced it.
+GOLDEN = {
+    "str": (
+        ["id"],
+        "id string, val string",
+        [(f"s{i}", f"v{i}", i % 2) for i in range(30)],
+        {
+            "0": (152, "7x0+uzsRJubcZFw/pUvhgXEwwg=="),
+            "1": (152, "1OVGlFKWqCP2/j7c9DvnN0qUGw=="),
+        },
+    ),
+    "big": (
+        ["id"],
+        "id bigint, val string",
+        [(i * 1_000_003 - 7, f"v{i}", i % 2) for i in range(-15, 15)]
+        + [(-(2**63), "min", 0), (2**63 - 1, "max", 1)],
+        {
+            "0": (160, "PP7iABH7wufmvso7J/10va4UOSI="),
+            "1": (160, "/cy/0J0DR47MztDBTBGsnQd6zLY="),
+        },
+    ),
+    "pair": (
+        ["a", "b"],
+        "a string, b bigint, val string",
+        [(f"a{i % 5}", i, f"v{i}", i % 2) for i in range(30)]
+        + [("a1", None, "null-b", 0)],
+        {
+            "0": (160, "cRJc9xlbFRPy3hTuQwBZExVS9AU="),
+            "1": (152, "r5H9nNb7Sy5IIuPQDDSGoc2apA=="),
+        },
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def golden_root(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("golden")
+    for name, (_keys, ddl, rows, _want) in GOLDEN.items():
+        spark.createDataFrame(rows, ddl + ", _bucket int").coalesce(
+            1
+        ).write.partitionBy("_bucket").parquet(str(root / name))
+    return str(root)
+
+
+@pytest.mark.parametrize("name", sorted(GOLDEN))
+def test_golden_bloom_bytes(spark, golden_root, name):
+    keys, _ddl, _rows, want = GOLDEN[name]
+    st = fs.collect_rel_stats(spark, golden_root, name)
+    fs.attach_blooms(spark, golden_root, name, keys, st)
+    got = {
+        b: [e["bloom"] for e in fm.values()] for b, fm in sorted(st.items())
+    }
+    assert got == {
+        b: [{"m": m, "k": fs.BLOOM_K, "b64": b64}]
+        for b, (m, b64) in want.items()
+    }
+
+
+def test_attach_blooms_runs_one_spark_job(spark, golden_root):
+    """No inference job, no shuffle: one scan collected as Arrow."""
+    st = fs.collect_rel_stats(spark, golden_root, "str")
+    before = _new_job_ids(spark)
+    fs.attach_blooms(spark, golden_root, "str", ["id"], st)
+    assert len(_new_job_ids(spark, before)) == 1
+    assert all("bloom" in e for fm in st.values() for e in fm.values())
+
+
+@pytest.fixture(scope="module")
+def capped_table(spark, tmp_path_factory):
+    """A 2-bucket table whose one delta commit, made with
+    BLOOM_MAX_FILE_ROWS = 2, writes a 1-row file and a 4-row file."""
+    from mariadb_cdc_spark.sources.lake import _bucket_col
+
+    t = _init(spark, str(tmp_path_factory.mktemp("capped") / "t"), n=400,
+              n_buckets=2)
+    buckets = {
+        r["id"]: r["b"]
+        for r in spark.createDataFrame(
+            [(f"k{i}",) for i in range(40)], "id string"
+        ).select("id", _bucket_col(["id"], 2).alias("b")).collect()
+    }
+    ids = [k for k in buckets if buckets[k] == 0][:1] + [
+        k for k in buckets if buckets[k] == 1
+    ][:4]
+    rows = [
+        (k, "UPSERT", {"id": k, "val": f"capped{j}"}, 10_000 + j)
+        for j, k in enumerate(ids)
+    ]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(fs, "BLOOM_MAX_FILE_ROWS", 2)
+        res = t.merge(_folded(spark, rows), stream_id="d", batch_id=1)
+    assert res["mode"] == "delta", res
+    return t
+
+
+def test_over_cap_file_gets_no_bloom(capped_table):
+    meta = capped_table.metadata()
+    (rel,) = {r for rels in meta["deltas"].values() for r in rels}
+    by_bucket = {
+        b: [e for e in fm.values()] for b, fm in meta["stats"][rel].items()
+    }
+    assert sorted(by_bucket) == ["0", "1"]
+    assert all("bloom" in e for e in by_bucket["0"])  # 1 row
+    assert not any("bloom" in e for e in by_bucket["1"])  # 4 rows
+
+
+def test_capped_table_has_no_false_negatives(capped_table):
+    full = sorted(tuple(r) for r in capped_table.read().collect())
+    assert len(full) == 400
+    want = [{"id": r[0]} for r in full]
+    assert sorted(tuple(r) for r in capped_table.read_keys(want).collect()) \
+        == full
+    assert sum(v.startswith("capped") for _k, v in full) == 5

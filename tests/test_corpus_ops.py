@@ -498,6 +498,25 @@ def test_learn_bpe_batched_rounds_and_equivalence(spark):
     assert got2 == seq2 == [("a", "b"), ("ab", "c")]
 
 
+def test_learn_bpe_batched_separator_symbols_match_sequential(spark):
+    """Symbols holding the batch map's \\x1f separator merge alone. Before
+    that, the round batching (d, d\\x1fd) also rewrote the adjacent pair
+    [d\\x1fd, d] (both join to "d\\x1fd\\x1fd") into "dd\\x1fd", and the
+    next round lost the sequential (d\\x1fd, d) merge."""
+    from mariadb_cdc_spark.functions.bpe import learn_bpe
+
+    docs = spark.createDataFrame(
+        [(0, "dd\x1fd edcd"), (1, "dd\x1fd d\x1fdd \x1fddc")],
+        "doc_id long, text string",
+    )
+    seq = learn_bpe(docs, num_merges=8, batch_k=1)
+    assert seq == [
+        ("\x1f", "d"), ("d", "\x1fd"), ("d", "c"), ("d", "d\x1fd"),
+        ("\x1fd", "dc"), ("d\x1fd", "d"), ("dc", "d"), ("e", "dcd"),
+    ]
+    assert learn_bpe(docs, num_merges=8, batch_k=2) == seq
+
+
 def test_learn_bpe_batched_tokenizer_roundtrip(spark):
     """Batched-learned merges still tokenize losslessly (concatenation
     restores the words) on the pseudo-random corpus."""
