@@ -116,15 +116,28 @@ def _le_hex(col: Column, nbytes: int) -> Column:
     width first (a real binlog wraps next_position at u32 via rotation).
     """
     masked = F.pmod(col.cast("long"), F.lit(1 << (8 * nbytes)))
-    be = F.lpad(F.lower(F.hex(masked)), 2 * nbytes, "0")
-    pairs = [F.substring(be, 2 * i + 1, 2) for i in range(nbytes)]
-    return F.concat(*reversed(pairs))
+    return _swap_bytes(F.lpad(F.lower(F.hex(masked)), 2 * nbytes, "0"))
 
 
 def _le_long(hexcol: Column, nbytes: int) -> Column:
     """Parse little-endian hex (2*nbytes chars) back to a long."""
-    pairs = [F.substring(hexcol, 2 * i + 1, 2) for i in range(nbytes)]
-    return F.conv(F.concat(*reversed(pairs)), 16, 10).cast("long")
+    return F.conv(
+        _swap_bytes(F.substring(hexcol, 1, 2 * nbytes)), 16, 10
+    ).cast("long")
+
+
+def _swap_bytes(hexcol: Column) -> Column:
+    """Reverse the byte (hex pair) order of a hex string; an odd trailing
+    nibble counts as one byte. It names `hexcol` ONCE. Catalyst inlines a
+    column wherever a filter above it references it, so a helper that
+    names its input k times makes a filter on a nested frame expression
+    k^depth times its size (with one reference per byte, a frame_status
+    filter over frame_events held 134 crc32 calls and was too large to
+    compile)."""
+    return F.array_join(
+        F.reverse(F.regexp_extract_all(hexcol, F.lit("(?s)..?"), F.lit(0))),
+        "",
+    )
 
 
 def _type_code(event_type: Column) -> Column:
@@ -220,20 +233,20 @@ def verify_event_checksums(
     # defaults to 'ok' classifies corruption as clean. Null frame, odd hex
     # length, or an unparseable header all land in 'length_mismatch'; a
     # parseable frame with any CRC-side null or mismatch is 'crc_mismatch'.
+    # coalesce(x != y, true) is "null or unequal" naming each side once,
+    # which keeps a frame_status filter linear in the frame expression.
+    def differs(a: Column, b: Column) -> Column:
+        return F.coalesce(a != b, F.lit(True))
+
     return out.withColumn(
         "frame_status",
         F.when(
-            frame.isNull()
-            | (n % 2 != 0)
-            | F.col("claimed_size").isNull()
-            | F.col("actual_size").isNull()
-            | (F.col("claimed_size") != F.col("actual_size")),
+            differs(n % 2, F.lit(0))
+            | differs(F.col("claimed_size"), F.col("actual_size")),
             F.lit("length_mismatch"),
         )
         .when(
-            F.col("stored_crc").isNull()
-            | F.col("computed_crc").isNull()
-            | (F.col("stored_crc") != F.col("computed_crc")),
+            differs(F.col("stored_crc"), F.col("computed_crc")),
             F.lit("crc_mismatch"),
         )
         .otherwise(F.lit("ok")),

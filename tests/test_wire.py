@@ -256,3 +256,32 @@ def test_position_beyond_u32_fails_loudly(spark, typed_events):
     )
     with pytest.raises(Exception, match="u32 wire limit"):
         frame_events(bad).select("frame_hex").collect()
+
+
+
+def test_status_filter_stays_linear_in_the_frame(spark):
+    """A frame_status filter is pushed below verify's projections, so
+    every reference to the frame inside the status verdict inlines the
+    whole frame_events expression. Each helper names its input once;
+    when the byte swaps named it once per byte, the optimized plan of
+    this filter held 134 crc32 calls and compiled no code. Short and
+    odd-length frames keep their 'length_mismatch' verdicts."""
+    import datetime
+
+    from mariadb_cdc_spark.schema import EVENT_SCHEMA
+
+    row = (5, "bin.000001", 100, "WRITE_ROWS", datetime.datetime(2020, 1, 1),
+           "g", 3, "db", "t", [1], ["a"], None, None, None, [True], None,
+           [{"a": "b"}], None, None, 4, None, None)
+    framed = frame_events(spark.createDataFrame([row], EVENT_SCHEMA))
+    v = verify_event_checksums(framed).where(F.col("frame_status") == "ok")
+    plan = v._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("crc32(") <= 16
+    assert v.count() == 1
+    frame = framed.first().frame_hex
+    odd = spark.createDataFrame(
+        [(None,), ("",), ("abc",), ("ab" * 12,), (frame[:-1],), (frame[:-2],)],
+        "frame_hex string",
+    )
+    assert [r.frame_status for r in verify_event_checksums(odd).collect()] \
+        == ["length_mismatch"] * 6
